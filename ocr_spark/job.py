@@ -328,7 +328,8 @@ def _parse(argv):
                         "corpora small enough to afford it")
     p.add_argument("--substr-exact", action="store_true",
                    help="exact-substring mode: count EVERY n-token "
-                        "span (equivalent to --substr-sample 1; "
+                        "span (equivalent to --substr-sample 1, so "
+                        "not combinable with --substr-sample; "
                         "quadratic-ish wall on realistic documents — "
                         "see --substr-sample)")
     p.add_argument("--clf-filter", default=None, metavar="DIR",
@@ -540,6 +541,8 @@ def _parse(argv):
         if args.substr_sample < 1:
             p.error("--substr-sample must be >= 1")
         if args.substr_exact:
+            if args.substr_sample != 8:
+                p.error("--substr-exact conflicts with --substr-sample")
             args.substr_sample = 1
     elif (args.substr_ngram != 50 or args.substr_max_frac != 0.5
           or args.substr_sample != 8 or args.substr_exact):

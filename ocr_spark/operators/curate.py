@@ -103,8 +103,9 @@ def curate(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     scale recommendation — Catalyst higher-order functions evaluate
     interpreted, so the expression signatures cost num_perm
     interpreted passes per document); the oracle twins pass 'md5'
-    explicitly, and the exact-Jaccard verify downstream is
-    hash-independent either way.
+    explicitly. The near-dup Jaccard verify follows the mode: exact
+    string shingles under 'md5', 31-bit shingle hashes under 'poly'
+    (dedup.minhash_lsh_pairs).
 
     decisions — one row per input document:
       (id_col, n_pii_redacted, n_chars_removed, n_dup_lines_removed,

@@ -372,8 +372,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     drop-counter frame production callers must log (a capped run says
     what it capped).
 
-    hash_mode selects the shingle-hash family for CANDIDATE generation
-    (the exact-Jaccard verify stage downstream is hash-independent):
+    hash_mode selects the shingle-hash family for candidate generation
+    and for the Jaccard verify: 'md5' and 'xxhash64' verify over exact
+    string shingles, while 'poly' verifies over the same 31-bit shingle
+    hashes its signatures use, an estimate that differs only on hash
+    collisions (~n²/2³² per doc, see _shingle_hashes_pandas_udf):
       'poly'     — numpy rolling-hash pandas UDF, one matmul per doc
                    (fastest; recommended at scale)
       'xxhash64' — pure-expression JVM form (no python workers needed)

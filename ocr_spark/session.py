@@ -60,8 +60,22 @@ def build_session(app_name: str = "ocr_spark", master: str | None = None,
         # a lean 4-core/3 GB executor). 8g (0.25 GB/slot) tipped long
         # bench sessions into full-GC thrash: measured 682 full GCs =
         # 43 s of GC inside one 81 s scrub rep, walls 17.6 s <-> 236 s
-        # bimodal; at 24g the same rep runs 17.6 s with ZERO full GCs.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # bimodal; at 24g (32 slots) the same rep runs 17.6 s with ZERO
+        # full GCs.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{cpus * 768}m"))
+        # Generated classes are cached by source text, JVM-wide. The
+        # default 100 entries is smaller than one job's working set, so
+        # every warm job_e2e pass recompiled ~136 classes and the JIT
+        # threads burned 9-25 s of CPU per pass. Measured cold-pass
+        # compilations on local[4]: job.main --input --curate
+        # --write-wet over 400 cc docs 147-154; the full curation chain
+        # (--partition-by --neardup --dedup-apply --quality-filter) 170;
+        # one stream_curate micro-batch 86; all three in one session
+        # ~320. AQE may fuse a broadcast join into a different stage
+        # from pass to pass, so a few variants of a class coexist.
+        # 1000 leaves ~3x headroom over that union.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -777,7 +777,9 @@ def test_job_substr_dedup_flag_validation(tmp_path):
                   ["--substr-dedup", str(tmp_path / "sd"),
                    "--substr-max-frac", "1.5"],
                   ["--substr-dedup", str(tmp_path / "sd"),
-                   "--substr-sample", "0"]):
+                   "--substr-sample", "0"],
+                  ["--substr-dedup", str(tmp_path / "sd"),
+                   "--substr-sample", "4", "--substr-exact"]):
         with pytest.raises(SystemExit):
             job.main(base + extra)
 
@@ -1106,6 +1108,34 @@ def test_job_outlinks_flag_validation(tmp_path):
         job._parse(["--synth", "4", "--table", str(tmp_path / "t"),
                     "--outlinks", str(tmp_path / "ol"),
                     "--host-rank-iters", "0"])
+
+
+def test_job_warm_pass_compiles_no_new_classes(spark, tmp_path):
+    """A repeated ingest -> curate -> WET pass in a warm session finds
+    all its generated classes in the codegen cache. A cache smaller than
+    the job's class working set recompiled ~130 classes on every pass.
+    AQE may plan a broadcast join into a different whole-stage shape
+    depending on which side's stage finishes first, and each first-seen
+    shape compiles once, so the check allows a few passes to meet one
+    that compiles nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(synth.generate_rows(24, profile="cc"),
+                          schema=schemas.INPUT_SCHEMA) \
+        .repartition(2).write.parquet(inp)
+
+    def compiled(d):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        job.main(["--input", inp, "--table", f"{d}/t", "--partitions", "2",
+                  "--curate", f"{d}/curate", "--write-wet", f"{d}/wet"],
+                 spark=spark)
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiled(tmp_path / "warm")
+    counts = []
+    while len(counts) < 3 and 0 not in counts:
+        counts.append(compiled(tmp_path / f"p{len(counts)}"))
+    assert 0 in counts, counts
 
 
 def test_job_write_wet_round_trip(spark, tmp_path):

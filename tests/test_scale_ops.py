@@ -975,8 +975,9 @@ class TestMultimodal:
 
     def test_decode_dispatch_gates(self):
         from ocr_spark.textlib import imagecodec as ic
-        # Baseline JPEG decodes natively now; corrupt JPEG bytes are a
-        # format error (progressive is the remaining gated process).
+        # Baseline and progressive JPEG decode natively; corrupt JPEG
+        # bytes are a format error (the gated processes are arithmetic
+        # coding, hierarchical, lossless, 12-bit and CMYK).
         with pytest.raises(ic.ImageFormatError):
             multimodal.decode_image(b"\xff\xd8\xff\xe0 not a real jpeg")
         with pytest.raises(ic.ImageFormatError):
