@@ -315,7 +315,7 @@ def _parse(argv):
                    help="drop a document when MORE than this fraction "
                         "of its spans occur in earlier documents "
                         "(default 0.5; 0.0 = any shared span drops)")
-    p.add_argument("--substr-sample", type=int, default=8,
+    p.add_argument("--substr-sample", type=int, default=None,
                    help="content-defined anchor sampling modulus: keep "
                         "only spans whose start token hashes to 0 mod "
                         "this. Default 8: dup_fraction becomes a "
@@ -538,14 +538,16 @@ def _parse(argv):
             p.error("--substr-ngram must be >= 2")
         if not 0.0 <= args.substr_max_frac <= 1.0:
             p.error("--substr-max-frac must be in [0, 1]")
-        if args.substr_sample < 1:
+        if args.substr_sample is not None and args.substr_sample < 1:
             p.error("--substr-sample must be >= 1")
         if args.substr_exact:
-            if args.substr_sample != 8:
+            if args.substr_sample is not None:
                 p.error("--substr-exact conflicts with --substr-sample")
             args.substr_sample = 1
+        elif args.substr_sample is None:
+            args.substr_sample = 8
     elif (args.substr_ngram != 50 or args.substr_max_frac != 0.5
-          or args.substr_sample != 8 or args.substr_exact):
+          or args.substr_sample is not None or args.substr_exact):
         p.error("--substr-ngram/--substr-max-frac/--substr-sample/"
                 "--substr-exact require --substr-dedup")
     if args.clf_filter:

@@ -7,6 +7,7 @@ spark-submit --conf; local[k] only swaps the master.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -16,6 +17,7 @@ def build_session(app_name: str = "ocr_spark", master: str | None = None,
                   extra_conf: dict | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
+    slots = _local_slots(master) or cpus
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
@@ -56,31 +58,40 @@ def build_session(app_name: str = "ocr_spark", master: str | None = None,
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
         # In local[k] ONE JVM hosts all k task slots, so the heap must
-        # be sized per-slot like a real executor's (0.75 GB/slot here ~=
-        # a lean 4-core/3 GB executor). 8g (0.25 GB/slot) tipped long
-        # bench sessions into full-GC thrash: measured 682 full GCs =
-        # 43 s of GC inside one 81 s scrub rep, walls 17.6 s <-> 236 s
-        # bimodal; at 24g (32 slots) the same rep runs 17.6 s with ZERO
-        # full GCs.
+        # be sized per slot of the master actually started (a caller's
+        # local[k] wins over SPARK_GRAFT_CPUS) like a real executor's:
+        # 0.75 GB/slot here ~= a lean 4-core/3 GB executor. 8g for 32
+        # slots (0.25 GB/slot) tipped long bench sessions into full-GC
+        # thrash: measured 682 full GCs = 43 s of GC inside one 81 s
+        # scrub rep, walls 17.6 s <-> 236 s bimodal; at 24g the same
+        # rep runs 17.6 s with ZERO full GCs.
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{cpus * 768}m"))
-        # Generated classes are cached by source text, JVM-wide. The
-        # default 100 entries is smaller than one job's working set, so
-        # every warm job_e2e pass recompiled ~136 classes and the JIT
-        # threads burned 9-25 s of CPU per pass. Measured cold-pass
-        # compilations on local[4]: job.main --input --curate
-        # --write-wet over 400 cc docs 147-154; the full curation chain
-        # (--partition-by --neardup --dedup-apply --quality-filter) 170;
-        # one stream_curate micro-batch 86; all three in one session
-        # ~320. AQE may fuse a broadcast join into a different stage
-        # from pass to pass, so a few variants of a class coexist.
-        # 1000 leaves ~3x headroom over that union.
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{slots * 768}m"))
+        # Generated classes are cached by source text, JVM-wide, in a
+        # segmented LRU. At the default 100 entries every repeat of a
+        # flow in a live session recompiled, and HotSpot re-JITted the
+        # new bytecode. Compilations per repeat on local[4], at 100 ->
+        # at 1000 entries: a later stream_curate micro-batch 21 -> 0;
+        # a warm job.main --input --curate --write-wet pass 136-145 ->
+        # 0; one session repeating that pass, the full curation chain
+        # (--partition-by --neardup --dedup-apply --quality-filter) and
+        # two waves of stream_extract, stream_curate and stream_neardup
+        # ~790 per round -> 6-7. That session's first round compiles
+        # ~400 distinct classes; AQE may fuse a broadcast join into a
+        # different stage from pass to pass, so a few variants of a
+        # class coexist. 1000 leaves ~2.5x headroom.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _local_slots(master: str) -> int | None:
+    """Task slots of a local[k] master; None for any other master."""
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    return int(m[1]) if m else None
 
 
 # Shuffle/spill scratch on RAM-backed tmpfs for benchmarks. On this

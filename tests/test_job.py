@@ -779,7 +779,9 @@ def test_job_substr_dedup_flag_validation(tmp_path):
                   ["--substr-dedup", str(tmp_path / "sd"),
                    "--substr-sample", "0"],
                   ["--substr-dedup", str(tmp_path / "sd"),
-                   "--substr-sample", "4", "--substr-exact"]):
+                   "--substr-sample", "4", "--substr-exact"],
+                  ["--substr-dedup", str(tmp_path / "sd"),
+                   "--substr-sample", "8", "--substr-exact"]):
         with pytest.raises(SystemExit):
             job.main(base + extra)
 
