@@ -8,70 +8,30 @@ Package + launch:
         ocr_spark/job.py --input /data/pages.parquet \\
         --table /data/extracted --metrics /data/metrics
 
-The job is a resumable pass over the input table: anti-join against
-the snapshot manifest (already-committed urls are skipped), salted
-mapInArrow extraction, atomic snapshot commit, then the per-partition
-metrics table appended for this run (north_rule lineage + metrics).
-Re-running the same command after a crash redoes only uncommitted
-work; re-running after success is a no-op. Passing --run-id of an
-already-committed run is refused (it would orphan that run's data).
---warc <dir> reads Common-Crawl WARC/WET segments directly instead of
-a parquet table (sources/warc.py; segment file = task).
---neardup <dir> adds a MinHash-LSH near-dup pass over the committed
-snapshot, persisting pairs plus the hot-bucket drop report (capped
-runs are never silent: the counters also land in the summary JSON).
---dedup-apply <dir> resolves those pairs to connected components with
-one survivor per cluster (dedup.dedup_resolve) and persists the
-per-url decisions plus the filtered survivor corpus — the step that
-actually SHRINKS the corpus.
---quality-filter <dir> applies the Gopher repetition thresholds
-(duplicate-line fraction, top-bigram character mass) to the committed
-snapshot, persisting the per-url signals and the filtered corpus.
---lang-filter <dir> keeps only documents whose detected language
-(script vote, then Latin stopword vote) is in --lang-keep, persisting
-the per-url signals and the filtered corpus.
---line-dedup <dir> removes corpus-level boilerplate lines (a trimmed
-line shared by more than 5 distinct documents) from every document,
-persisting the cleaned corpus with per-document removal counts.
---lm-score <dir> trains a CCNet-style char-trigram language model on
-a reference corpus (--lm-ref parquet; default: the committed snapshot
-itself) and persists per-url bits-per-character signals; --lm-max-bits
-additionally persists the corpus filtered to documents at or under
-that score.
---token-sample <dir> cuts a deterministic token-budget subcorpus
-(--token-budget N tokens, salted-hash document order, bucketed
-prefix-sum — no global window), persisting the sample and its report.
---pii-scrub <dir> redacts emails, then IPs, then phone numbers
-(Dolma-style tokens, operators/scrub.py) from every document,
-persisting the scrubbed corpus with per-document redaction counts.
---clean-text <dir> normalizes every document (CRLF fold, control
-strip, unicode NFC, whitespace collapse), persisting the cleaned
-corpus with per-document character deltas.
---c4-filter <dir> applies the C4 heuristic cleanup (Raffel et al.
-2020: terminal-punctuation line retention, sentence floor, lorem
-ipsum / brace / bad-word page gates), persisting the per-url signals
-and the filtered corpus (retained lines only).
---domain-filter <dir> profiles the corpus per host (url_host key) and
-gates it with --domain-block (exact-or-subdomain blocklist) and/or
---domain-cap (max docs per host, deterministic survivors), persisting
-the per-host stats and the gated corpus.
---robots-filter <dir> gates the corpus on the RFC 9309 crawl verdict:
---robots-txt points at a (host, robots_txt) parquet, the rules that
-govern --robots-agent are parsed once per host (domains.robots_rules)
-and every url gets a longest-match allow/disallow verdict
-(domains.crawl_gate); the parsed rules and the allowed corpus persist,
-with kept/dropped counts in the summary.
+One invocation runs these steps, each only when asked, in this fixed
+order:
 
-Catalog maintenance (each may run alone — no input source needed — or
-after an ingest pass in the same invocation):
---rollback <seq> moves the table head back to snapshot <seq> (a new
-replicating snapshot; the undone runs' urls become uncommitted and the
-next pass re-extracts them). Runs BEFORE the ingest pass.
---compact rewrites the accrued per-run data dirs into one sized dir
-behind a replace-snapshot (same rows, fewer files — the long-lived
-ingest's file-listing fix). Runs AFTER ingest + curation.
---expire-keep <n> drops all but the newest n manifests and reclaims
-data dirs referenced only by expired history. Runs last.
+1. --rollback moves the table head back to an earlier snapshot.
+2. Ingest (--input, --warc or --synth) is a resumable pass over the
+   input: an anti-join against the snapshot manifest skips the urls
+   already committed, salted mapInArrow extraction runs, the snapshot
+   commits atomically and the run's per-partition metrics are appended.
+   Re-running after a crash redoes only uncommitted work; re-running
+   after success is a no-op. Passing --run-id of an already-committed
+   run is refused (it would orphan that run's data).
+3. --outlinks reads the link layer of the INPUT pages.
+4. The stages of ``_STAGES``, in table order. They all read ONE
+   committed snapshot, taken once after ingest, and none of them writes
+   the table, so all of them see the same rows (--dedup-apply also
+   reads the pairs --neardup persisted just before it). Each persists
+   its outputs under its own DIR and adds one summary entry named after
+   its flag.
+5. --compact, then --expire-keep: catalog maintenance. Maintenance may
+   run with no input source at all.
+
+The summary JSON is printed and returned. An option that only a step
+reads is a usage error unless that step runs (``_CONSUMERS``); per-flag
+behaviour is in --help.
 
 Configuration (shuffle partitions, AQE, Arrow batch size, memory)
 comes from spark-submit --conf on a real cluster; launched standalone
@@ -84,6 +44,8 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+
+from pyspark.sql import functions as F
 
 
 def _parse_mix_weights(spec: str | None) -> dict[str, float] | None:
@@ -106,7 +68,7 @@ def _parse_mix_weights(spec: str | None) -> dict[str, float] | None:
     return weights
 
 
-def _parse(argv):
+def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="ocr_spark batch extraction job")
     src = p.add_mutually_exclusive_group(required=False)
     src.add_argument("--input", help="input parquet path (north-rule schema)")
@@ -138,7 +100,7 @@ def _parse(argv):
                    help="extraction partitions (default: 2x parallelism)")
     p.add_argument("--synth-profile", default="cc",
                    choices=("default", "cc"))
-    p.add_argument("--neardup", default=None,
+    p.add_argument("--neardup", default=None, metavar="DIR",
                    help="run MinHash-LSH near-dup over the committed "
                         "snapshot's extracted_text and write pairs + the "
                         "hot-bucket drop report under this dir")
@@ -193,7 +155,7 @@ def _parse(argv):
                         "and the filtered corpus under DIR")
     p.add_argument("--lang-keep", default="en",
                    help="comma-separated language codes --lang-filter "
-                        "keeps (default: en)")
+                        "and --curate keep (default: en)")
     p.add_argument("--domain-filter", default=None, metavar="DIR",
                    help="per-domain curation over the committed "
                         "snapshot (operators/domains.py): persist the "
@@ -278,8 +240,9 @@ def _parse(argv):
                         "per-url signals and the filtered corpus "
                         "(retained lines only) under DIR")
     p.add_argument("--c4-bad-words", default=None, metavar="WORDS",
-                   help="comma-separated bad-word list for --c4-filter's "
-                        "page gate (the paper's LDNOOBW list is external "
+                   help="comma-separated bad-word list for the C4 page "
+                        "gate of --c4-filter and --curate (the paper's "
+                        "LDNOOBW list is external "
                         "— supply it here; default: gate vacuous)")
     p.add_argument("--line-dedup", default=None, metavar="DIR",
                    help="remove corpus-level boilerplate lines "
@@ -295,10 +258,10 @@ def _parse(argv):
     p.add_argument("--benchmark", default=None, metavar="PATH",
                    help="parquet of benchmark/eval documents (column "
                         "'text') whose n-grams define contamination for "
-                        "--decontam")
+                        "--decontam and --curate")
     p.add_argument("--decontam-ngram", type=int, default=13,
-                   help="shingle width in tokens for --decontam "
-                        "(default 13, the GPT-3/Pile setting)")
+                   help="shingle width in tokens for --decontam and "
+                        "--curate (default 13, the GPT-3/Pile setting)")
     p.add_argument("--decontam-min-hits", type=int, default=1,
                    help="distinct overlapping n-grams required to drop "
                         "a document (default 1 = any overlap)")
@@ -315,23 +278,17 @@ def _parse(argv):
                    help="drop a document when MORE than this fraction "
                         "of its spans occur in earlier documents "
                         "(default 0.5; 0.0 = any shared span drops)")
-    p.add_argument("--substr-sample", type=int, default=None,
+    p.add_argument("--substr-sample", type=int, default=8,
                    help="content-defined anchor sampling modulus: keep "
                         "only spans whose start token hashes to 0 mod "
                         "this. Default 8: dup_fraction becomes a "
                         "sampled ESTIMATE (a duplicated run of g spans "
                         "goes unsampled with probability ~(1-1/8)^g, "
                         "~0.2%% for a 2n-token span) and the wall drops "
-                        "~10x — exact mode (= 1) did not finish at "
+                        "~10x — exact mode (1) did not finish at "
                         "160k-doc scale in 560s where mod=8 took 16s. "
-                        "Use --substr-exact for exact counting on "
-                        "corpora small enough to afford it")
-    p.add_argument("--substr-exact", action="store_true",
-                   help="exact-substring mode: count EVERY n-token "
-                        "span (equivalent to --substr-sample 1, so "
-                        "not combinable with --substr-sample; "
-                        "quadratic-ish wall on realistic documents — "
-                        "see --substr-sample)")
+                        "Pass 1 to count every span exactly on corpora "
+                        "small enough to afford it")
     p.add_argument("--clf-filter", default=None, metavar="DIR",
                    help="score every committed document with a Naive "
                         "Bayes quality classifier (DCLM/FineWeb-style "
@@ -427,148 +384,692 @@ def _parse(argv):
                    help="drop all but the newest N manifests and reclaim "
                         "data dirs referenced only by expired history "
                         "(runs last)")
+    return p
+
+
+_SOURCES = ("input", "warc", "synth")
+
+#: Every option that only some steps read, mapped to the flags of those
+#: steps. One rule covers them all: an option set away from its parser
+#: default while none of its steps runs is a usage error, because it
+#: would otherwise be silently ignored.
+_CONSUMERS = {
+    "metrics": _SOURCES, "run_id": _SOURCES, "partition_by": _SOURCES,
+    "partitions": _SOURCES, "synth_profile": ("synth",),
+    "neardup_method": ("neardup",), "embeddings": ("neardup",),
+    "neardup_max_bucket": ("neardup", "curate"),
+    "gopher_full": ("quality_filter",),
+    "shard_tokens": ("shard",),
+    "lang_keep": ("lang_filter", "curate"),
+    "domain_block": ("domain_filter",), "domain_cap": ("domain_filter",),
+    "robots_txt": ("robots_filter",), "robots_agent": ("robots_filter",),
+    "token_budget": ("token_sample",),
+    "sample_salt": ("token_sample", "mixture"),
+    "mix_weights": ("mixture",), "mix_budget": ("mixture",),
+    "mix_group": ("mixture",),
+    "lm_ref": ("lm_score",), "lm_buckets": ("lm_score",),
+    "lm_max_bits": ("lm_score",),
+    "c4_bad_words": ("c4_filter", "curate"),
+    "benchmark": ("decontam", "curate"),
+    "decontam_ngram": ("decontam", "curate"),
+    "decontam_min_hits": ("decontam", "curate"),
+    "substr_ngram": ("substr_dedup",), "substr_max_frac": ("substr_dedup",),
+    "substr_sample": ("substr_dedup",),
+    "clf_pos": ("clf_filter",), "clf_neg": ("clf_filter",),
+    "clf_threshold": ("clf_filter",),
+    "curate_repair": ("curate",),
+    "wet_segments": ("write_wet",),
+    "bm25_buckets": ("bm25_index",), "bm25_query": ("bm25_index",),
+    "bpe_merges": ("bpe_train",),
+    "host_rank_iters": ("outlinks",),
+    "compact_partitions": ("compact",),
+}
+
+#: Lower bounds of the numeric options (when given).
+_MINIMUM = {"domain_cap": 1, "bpe_merges": 1, "bm25_buckets": 1,
+            "host_rank_iters": 1, "wet_segments": 1, "decontam_ngram": 2,
+            "decontam_min_hits": 1, "substr_ngram": 2, "substr_sample": 1}
+
+
+def _csv(spec: str | None) -> list[str]:
+    return [x.strip() for x in (spec or "").split(",") if x.strip()]
+
+
+def _parse(argv):
+    p = _parser()
     args = p.parse_args(argv)
+
+    def flag(dest):
+        return "--" + dest.replace("_", "-")
+
+    def is_set(dest):
+        return getattr(args, dest) != p.get_default(dest)
+
     has_source = (args.input or args.warc or args.synth is not None)
     has_maintenance = (args.rollback is not None or args.compact
                        or args.expire_keep is not None)
     if not has_source and not has_maintenance:
         p.error("need an input source (--input/--warc/--synth) or a "
                 "maintenance op (--rollback/--compact/--expire-keep)")
-    if args.compact_partitions is not None and not args.compact:
-        p.error("--compact-partitions requires --compact")
+    for dest, readers in _CONSUMERS.items():
+        if is_set(dest) and not any(is_set(r) for r in readers):
+            p.error(f"{flag(dest)} only applies with "
+                    + " or ".join(map(flag, readers)))
+    for dest, lo in _MINIMUM.items():
+        if getattr(args, dest) is not None and getattr(args, dest) < lo:
+            p.error(f"{flag(dest)} must be >= {lo}")
     if args.expire_keep is not None and args.expire_keep < 1:
         p.error("--expire-keep must be >= 1 (the head snapshot must "
                 "always be retained)")
+    if not 0.0 <= args.substr_max_frac <= 1.0:
+        p.error("--substr-max-frac must be in [0, 1]")
     if args.dedup_apply and not args.neardup:
         p.error("--dedup-apply requires --neardup (it resolves the "
                 "pairs that stage persists)")
-    if not args.neardup:
-        # A method/sidecar without the stage would be silently ignored
-        # — same dependency rule as --dedup-apply above.
-        if args.neardup_method != "minhash":
-            p.error("--neardup-method requires --neardup")
-        if args.embeddings:
-            p.error("--embeddings requires --neardup with "
-                    "--neardup-method embedding or semantic")
-    elif (args.neardup_method in ("embedding", "semantic")
-          and not args.embeddings):
+    if (args.neardup_method in ("embedding", "semantic")
+            and not args.embeddings):
         p.error(f"--neardup-method {args.neardup_method} requires "
                 "--embeddings (the snapshot carries no vectors)")
-    if args.domain_filter:
-        if not args.domain_block and args.domain_cap is None:
-            p.error("--domain-filter needs --domain-block and/or "
-                    "--domain-cap (a gate with no rule would copy the "
-                    "corpus and report nothing)")
-        if args.domain_cap is not None and args.domain_cap < 1:
-            p.error("--domain-cap must be >= 1")
-        if args.domain_block:
-            entries = [b.strip().lower().lstrip(".")
-                       for b in args.domain_block.split(",")]
-            bad = [b for b in entries if not b or "/" in b or ":" in b]
-            if bad:
-                p.error(f"--domain-block entries must be bare hosts "
-                        f"(no scheme/port/path): {bad}")
-    elif args.domain_block or args.domain_cap is not None:
-        p.error("--domain-block/--domain-cap require --domain-filter")
+    if (args.domain_filter and not args.domain_block
+            and args.domain_cap is None):
+        p.error("--domain-filter needs --domain-block and/or "
+                "--domain-cap (a gate with no rule would copy the "
+                "corpus and report nothing)")
+    if args.domain_block:
+        entries = [b.strip().lower().lstrip(".")
+                   for b in args.domain_block.split(",")]
+        bad = [b for b in entries if not b or "/" in b or ":" in b]
+        if bad:
+            p.error(f"--domain-block entries must be bare hosts "
+                    f"(no scheme/port/path): {bad}")
     if args.robots_filter and not args.robots_txt:
         p.error("--robots-filter needs --robots-txt (the per-host "
                 "robots.txt parquet)")
-    if args.robots_txt and not args.robots_filter:
-        p.error("--robots-txt requires --robots-filter")
-    if args.robots_agent != "*" and not args.robots_filter:
-        p.error("--robots-agent requires --robots-filter")
-    if args.c4_bad_words is not None and not args.c4_filter:
-        p.error("--c4-bad-words requires --c4-filter")
-    if args.bpe_merges < 1:
-        p.error("--bpe-merges must be >= 1")
-    if args.bpe_merges != 256 and not args.bpe_train:
-        p.error("--bpe-merges only applies with --bpe-train")
-    if args.bm25_buckets < 1:
-        p.error("--bm25-buckets must be >= 1")
-    if args.bm25_buckets != 64 and not args.bm25_index:
-        p.error("--bm25-buckets only applies with --bm25-index")
-    if args.bm25_query and not args.bm25_index:
-        p.error("--bm25-query requires --bm25-index")
     if args.outlinks and not has_source:
         p.error("--outlinks reads the INPUT pages' html and needs an "
                 "input source (--input/--warc/--synth)")
-    if args.host_rank_iters != 10 and not args.outlinks:
-        p.error("--host-rank-iters requires --outlinks")
-    if args.host_rank_iters < 1:
-        p.error("--host-rank-iters must be >= 1")
-    if args.wet_segments < 1:
-        p.error("--wet-segments must be >= 1")
-    if args.wet_segments != 64 and not args.write_wet:
-        p.error("--wet-segments only applies with --write-wet")
-    if ((args.lm_ref or args.lm_max_bits is not None or args.lm_buckets)
-            and not args.lm_score):
-        p.error("--lm-ref/--lm-max-bits/--lm-buckets require --lm-score")
-    if args.mixture and not (args.mix_weights and args.mix_budget):
-        p.error("--mixture requires --mix-weights and --mix-budget")
-    if ((args.mix_weights or args.mix_budget is not None
-         or args.mix_group != "lang") and not args.mixture):
-        p.error("--mix-weights/--mix-budget/--mix-group require "
-                "--mixture")
     if args.mixture:
+        if not (args.mix_weights and args.mix_budget):
+            p.error("--mixture requires --mix-weights and --mix-budget")
         try:
-            mw = _parse_mix_weights(args.mix_weights)
+            _parse_mix_weights(args.mix_weights)
         except ValueError:
-            mw = None
-        if not mw:
             p.error("--mix-weights must be a comma list of g=w pairs "
                     "with non-negative weights and a positive sum")
     if args.token_sample and args.token_budget is None:
         p.error("--token-sample requires --token-budget")
-    if args.token_budget is not None and not args.token_sample:
-        p.error("--token-budget requires --token-sample")
-    if args.decontam:
-        if not args.benchmark:
-            p.error("--decontam requires --benchmark (contamination is "
-                    "defined relative to an eval corpus)")
-        if args.decontam_ngram < 2:
-            p.error("--decontam-ngram must be >= 2")
-        if args.decontam_min_hits < 1:
-            p.error("--decontam-min-hits must be >= 1")
-    elif (args.benchmark or args.decontam_ngram != 13
-          or args.decontam_min_hits != 1):
-        p.error("--benchmark/--decontam-ngram/--decontam-min-hits "
-                "require --decontam")
-    if args.substr_dedup:
-        if args.substr_ngram < 2:
-            p.error("--substr-ngram must be >= 2")
-        if not 0.0 <= args.substr_max_frac <= 1.0:
-            p.error("--substr-max-frac must be in [0, 1]")
-        if args.substr_sample is not None and args.substr_sample < 1:
-            p.error("--substr-sample must be >= 1")
-        if args.substr_exact:
-            if args.substr_sample is not None:
-                p.error("--substr-exact conflicts with --substr-sample")
-            args.substr_sample = 1
-        elif args.substr_sample is None:
-            args.substr_sample = 8
-    elif (args.substr_ngram != 50 or args.substr_max_frac != 0.5
-          or args.substr_sample is not None or args.substr_exact):
-        p.error("--substr-ngram/--substr-max-frac/--substr-sample/"
-                "--substr-exact require --substr-dedup")
-    if args.clf_filter:
-        if not (args.clf_pos and args.clf_neg):
-            p.error("--clf-filter requires --clf-pos and --clf-neg "
-                    "(the classifier is trained from labeled examples)")
-    elif args.clf_pos or args.clf_neg or args.clf_threshold != 0.0:
-        p.error("--clf-pos/--clf-neg/--clf-threshold require "
-                "--clf-filter")
-    if args.lang_filter:
-        from ocr_spark.operators import textstats
-        known = (set(textstats.LANG_STOPWORDS)
-                 | set(textstats.SCRIPT_RANGES) | {"und"})
-        keep = [c.strip() for c in args.lang_keep.split(",") if c.strip()]
-        bad = [c for c in keep if c not in known]
-        if not keep or bad:
-            p.error(f"--lang-keep must name lang_id codes "
-                    f"({', '.join(sorted(known))}); got "
-                    f"{bad or '(empty)'} — an unmatched gate would "
-                    f"silently delete the whole corpus")
+    if args.decontam and not args.benchmark:
+        p.error("--decontam requires --benchmark (contamination is "
+                "defined relative to an eval corpus)")
+    if args.clf_filter and not (args.clf_pos and args.clf_neg):
+        p.error("--clf-filter requires --clf-pos and --clf-neg "
+                "(the classifier is trained from labeled examples)")
+    from ocr_spark.operators import textstats
+    known = (set(textstats.LANG_STOPWORDS)
+             | set(textstats.SCRIPT_RANGES) | {"und"})
+    keep = _csv(args.lang_keep)
+    bad = [c for c in keep if c not in known]
+    if not keep or bad:
+        p.error(f"--lang-keep must name lang_id codes "
+                f"({', '.join(sorted(known))}); got "
+                f"{bad or '(empty)'} — an unmatched gate would "
+                f"silently delete the whole corpus")
     return args
+
+
+def _persist(df, path):
+    """Write ``df`` to ``path`` and return the table read back, so what
+    follows reads the persisted rows instead of re-running the lineage."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def _gate(committed, kept, out_dir) -> dict:
+    """Persist a gate's surviving corpus under ``{out_dir}/filtered``
+    and count it against the committed snapshot."""
+    n_kept = _persist(kept, f"{out_dir}/filtered").count()
+    n_docs = committed.count()
+    return {"docs": n_docs, "kept": n_kept, "dropped": n_docs - n_kept}
+
+
+def _outlinks(spark, args, input_df) -> dict:
+    # WAT-style link layer next to the text extraction: the link table
+    # comes from the INPUT pages (html never reaches the committed text
+    # table), the host graph and rank from the persisted links — so
+    # host_rank reads parquet, not a re-extraction.
+    from ocr_spark.operators import webgraph
+    if "html" not in input_df.columns or "url" not in input_df.columns:
+        raise ValueError(
+            "--outlinks needs (url, html) on the input source; "
+            f"got columns {input_df.columns}")
+    links = _persist(webgraph.extract_outlinks(
+        input_df.select("url", "html"), num_partitions=args.partitions),
+        f"{args.outlinks}/links")
+    edges = _persist(webgraph.host_edges(links),
+                     f"{args.outlinks}/host_edges")
+    ranks = _persist(webgraph.host_rank(edges, iters=args.host_rank_iters),
+                     f"{args.outlinks}/host_rank")
+    return {"links": links.count(),
+            "nofollow_links": links.filter("nofollow").count(),
+            "host_edges": edges.count(),
+            "hosts_ranked": ranks.count()}
+
+
+def _write_wet(spark, args, committed) -> dict:
+    # Publish the extracted corpus back in the crawl's own container
+    # format: WET conversion records any downstream WET consumer
+    # (including this repo's --warc source) reads unchanged. Executors
+    # write the segment files; the driver only persists the
+    # num_segments-row manifest. Deterministic bytes (content-addressed
+    # segments, sorted rows, mtime-0 gzip) make a re-run or task retry
+    # install identical files.
+    from ocr_spark.sources import warc
+    pages = committed.select("url", "warc_ts",
+                             F.col("extracted_text").alias("text"), "lang")
+    man = _persist(warc.write_wet(pages, f"{args.write_wet}/segments",
+                                  num_segments=args.wet_segments),
+                   f"{args.write_wet}/manifest")
+    agg = man.agg(F.count("*").alias("segments"),
+                  F.sum("n_records").alias("records"),
+                  F.sum("n_bytes").alias("bytes"),
+                  F.sum("n_skipped").alias("skipped")).first()
+    return {k: int(agg[k] or 0)
+            for k in ("segments", "records", "bytes", "skipped")}
+
+
+def _bm25_index(spark, args, committed) -> dict:
+    # Inverted-index layer over the committed extraction output:
+    # postings/terms partitioned by term-hash bucket (file-level prune at
+    # search time), meta as one row. Searches, if asked, run against the
+    # on-disk layout — the same path a separate search job would take —
+    # never against the in-session frames.
+    from ocr_spark.operators import search
+    corpus = committed.select("url", F.col("extracted_text").alias("text"))
+    search.bm25_write_index(corpus, args.bm25_index,
+                            buckets=args.bm25_buckets, id_col="url")
+    meta = spark.read.parquet(f"{args.bm25_index}/meta").first()
+    out = {"docs": int(meta["n_docs"]),
+           "avgdl": round(float(meta["avgdl"] or 0.0), 2),
+           "buckets": args.bm25_buckets}
+    if args.bm25_query:
+        queries = spark.createDataFrame(list(enumerate(args.bm25_query)),
+                                        "query_id int, query_text string")
+        hits = search.bm25_search_index(
+            spark, args.bm25_index, queries, k=10,
+            buckets=args.bm25_buckets, id_col="url")
+        out["queries"] = len(args.bm25_query)
+        out["hits"] = _persist(hits, f"{args.bm25_index}/hits").count()
+    return out
+
+
+def _bpe_train(spark, args, committed) -> dict:
+    # Tokenizer layer: the merge table is the persistable artifact (what
+    # a training run ships alongside the corpus); the encode pass runs
+    # the Arrow production path — the expression encoder is for bounded
+    # oracle-able tables, not 256-merge jobs.
+    from ocr_spark.operators import bpe
+    corpus = committed.select("url", F.col("extracted_text").alias("text"))
+    merges = bpe.bpe_train(corpus, num_merges=args.bpe_merges, id_col="url")
+    bpe.merges_df(spark, merges).write.mode("overwrite").parquet(
+        f"{args.bpe_train}/merges")
+    enc = _persist(bpe.bpe_encode_arrow(corpus, merges, id_col="url")
+                   .select("url", "n_bpe_tokens"),
+                   f"{args.bpe_train}/encoded")
+    agg = enc.agg(F.count("*").alias("docs"),
+                  F.sum("n_bpe_tokens").alias("toks")).first()
+    return {"merges": len(merges), "docs_encoded": int(agg["docs"]),
+            "bpe_tokens": int(agg["toks"] or 0)}
+
+
+def _neardup(spark, args, committed) -> dict:
+    # The hot-bucket cap drops degenerate buckets (dedup.cap_buckets); a
+    # capped run must SAY what it capped, so the drop counters are
+    # persisted next to the pairs and surfaced in the summary. Every
+    # pair generator feeds the same pairs/resolve/apply tail — they
+    # share the (id_a, id_b) contract and the one-row bucket_report
+    # shape.
+    from ocr_spark.operators import dedup
+    coverage = {}
+
+    def _embedding_sidecar(d):
+        # The committed snapshot carries no vectors; an embeddings
+        # sidecar table joins in by url (semi-join so uncommitted or
+        # stale vectors never create pairs; one row per url so an
+        # append-built sidecar can't fan pairs out). Coverage is
+        # counted: docs the sidecar MISSES can never pair, and a silent
+        # gap would violate this stage's never-silent contract.
+        emb = (spark.read.parquet(args.embeddings)
+               .dropDuplicates(["url"])
+               .join(d.select("url"), "url", "left_semi"))
+        coverage["docs_with_embeddings"] = emb.count()
+        coverage["docs_missing_embeddings"] = (
+            d.count() - coverage["docs_with_embeddings"])
+        return emb
+
+    def _embedding_pairs(d):
+        from ocr_spark.operators import similarity
+        return similarity.embedding_near_dup_pairs(
+            _embedding_sidecar(d), id_col="url", vec_col="embedding",
+            max_bucket=args.neardup_max_bucket, return_report=True)
+
+    def _semantic_pairs(d):
+        # SemDeDup (Abbas et al. 2023): learned k-means cells instead of
+        # LSH buckets; same sidecar contract and the same (id_a, id_b) +
+        # bucket_report shape downstream.
+        from ocr_spark.operators import similarity
+        return similarity.semantic_dedup_pairs(
+            _embedding_sidecar(d), id_col="url", vec_col="embedding",
+            max_cell=args.neardup_max_bucket, return_report=True)
+
+    generators = {
+        "minhash": lambda d: dedup.minhash_lsh_pairs(
+            d, text_col="extracted_text", id_col="url", hash_mode="poly",
+            max_bucket=args.neardup_max_bucket, return_report=True),
+        "simhash": lambda d: dedup.simhash_pairs(
+            d, text_col="extracted_text", id_col="url",
+            max_bucket=args.neardup_max_bucket, return_report=True),
+        "ngram": lambda d: dedup.ngram_jaccard_pairs(
+            d, text_col="extracted_text", id_col="url",
+            max_bucket=args.neardup_max_bucket, return_report=True),
+        "embedding": _embedding_pairs,
+        "semantic": _semantic_pairs,
+    }
+    pairs, report = generators[args.neardup_method](
+        committed.select("url", "extracted_text"))
+    pairs = _persist(pairs, f"{args.neardup}/pairs")
+    rep = _persist(report, f"{args.neardup}/bucket_report").first()
+    return {"method": args.neardup_method, "pairs": pairs.count(),
+            **coverage,
+            **{k: int(rep[k]) for k in
+               ("n_buckets", "max_bucket_size", "n_hot_buckets",
+                "rows_dropped", "max_bucket")}}
+
+
+def _dedup_apply(spark, args, committed) -> dict:
+    # Pairs are analytics; DECISIONS shrink the corpus: components ->
+    # one survivor per cluster -> anti-join the losers out. Both tables
+    # persist so a downstream job (or a resumed one) applies the same
+    # decisions.
+    from ocr_spark.operators import dedup
+    pairs = spark.read.parquet(f"{args.neardup}/pairs")
+    resolved = _persist(dedup.dedup_resolve(pairs, docs=committed,
+                                            id_col="url"),
+                        f"{args.dedup_apply}/resolved")
+    survivors = _persist(dedup.dedup_apply(committed, resolved,
+                                           id_col="url"),
+                         f"{args.dedup_apply}/survivors")
+    n_docs = committed.count()
+    n_kept = survivors.count()
+    return {"docs": n_docs, "survivors": n_kept, "dropped": n_docs - n_kept,
+            "clusters": resolved.filter("keep").count()}
+
+
+def _quality_filter(spark, args, committed) -> dict:
+    # Gopher-style repetition gate (textstats; Rae et al. 2021
+    # thresholds): the signals table persists next to the filtered
+    # corpus so a dropped page is always explainable.
+    from ocr_spark.operators import textstats
+    rep = (textstats.repetition_stats_full if args.gopher_full
+           else textstats.repetition_stats)
+    stats = _persist(rep(committed.select("url", "extracted_text"),
+                         text_col="extracted_text", id_col="url"),
+                     f"{args.quality_filter}/signals")
+    kept = committed.join(stats.filter("keep").select("url"),
+                          on="url", how="left_semi")
+    return _gate(committed, kept, args.quality_filter)
+
+
+def _lang_filter(spark, args, committed) -> dict:
+    # Language gate (the standard first curation stage of a webtext
+    # pipeline — CCNet/Gopher both lead with it): per-url signals
+    # persist next to the filtered corpus so a dropped page is always
+    # explainable, same contract as --quality-filter.
+    from ocr_spark.operators import textstats
+    keep_langs = _csv(args.lang_keep)
+    # with_lang_guess, not the Column form: the landed token array
+    # evaluates the normalize+split once per document instead of ~L^2
+    # times (textstats.lang_id PERF WARNING).
+    signals = _persist(textstats.with_lang_guess(committed, "extracted_text")
+                       .select("url", "lang_guess"),
+                       f"{args.lang_filter}/signals")
+    kept = committed.join(
+        signals.filter(F.col("lang_guess").isin(keep_langs)).select("url"),
+        on="url", how="left_semi")
+    return {"keep": keep_langs, **_gate(committed, kept, args.lang_filter)}
+
+
+def _shard(spark, args, committed) -> dict:
+    # Deterministic fixed-token training shards (the layout training
+    # loaders consume): Hive-partitioned shard=K/ dirs + a per-shard
+    # (docs, tokens) manifest. Reproducible from (--shard-tokens,
+    # salt=0) alone.
+    from ocr_spark.operators import sampling
+    sampling.write_token_shards(committed, args.shard, args.shard_tokens,
+                                text_col="extracted_text", id_col="url")
+    rows = spark.read.parquet(f"{args.shard}/_manifest")\
+        .orderBy("shard").collect()
+    return {"tokens_per_shard": args.shard_tokens, "n_shards": len(rows),
+            "total_tokens": sum(int(r["tokens"]) for r in rows),
+            "total_docs": sum(int(r["docs"]) for r in rows)}
+
+
+def _decontam(spark, args, committed) -> dict:
+    # Benchmark decontamination (Brown et al. 2020 Appendix C): the
+    # per-url hit counts persist next to the decontaminated corpus so a
+    # dropped page is always explainable.
+    from ocr_spark.operators import decontam
+    hits = _persist(decontam.contamination(
+        committed, spark.read.parquet(args.benchmark),
+        n=args.decontam_ngram, text_col="extracted_text", id_col="url",
+        bench_text_col="text"), f"{args.decontam}/hits")
+    bad = hits.filter(F.col("hit_count") >= args.decontam_min_hits)
+    kept = committed.join(bad.select("url"), on="url", how="left_anti")
+    return {"ngram": args.decontam_ngram,
+            "min_hits": args.decontam_min_hits,
+            **_gate(committed, kept, args.decontam),
+            "contaminated": bad.count()}
+
+
+def _substr_dedup(spark, args, committed) -> dict:
+    # Intra-corpus exact-substring dedup (Lee et al. 2021): keep-first
+    # by url; the per-url span stats persist next to the survivor
+    # corpus.
+    from ocr_spark.operators import decontam
+    stats = _persist(decontam.substring_duplication(
+        committed, n=args.substr_ngram, text_col="extracted_text",
+        id_col="url", sample_mod=args.substr_sample),
+        f"{args.substr_dedup}/spans")
+    bad = stats.filter(F.col("dup_fraction") > args.substr_max_frac)
+    kept = committed.join(bad.select("url"), on="url", how="left_anti")
+    return {"ngram": args.substr_ngram, "max_frac": args.substr_max_frac,
+            "sample_mod": args.substr_sample,
+            **_gate(committed, kept, args.substr_dedup)}
+
+
+def _clf_filter(spark, args, committed) -> dict:
+    # Model-based quality filtering (DCLM/FineWeb-style): the
+    # closed-form NB model trains on the labeled sidecars, every
+    # committed doc's score persists next to the filtered corpus.
+    from ocr_spark.operators import qualityclf
+
+    def examples(path):
+        # Sidecar examples carry 'text'; the snapshot carries
+        # 'extracted_text' — fold both onto the snapshot's name.
+        return spark.read.parquet(path).select(
+            F.col("text").alias("extracted_text"))
+
+    scores = _persist(qualityclf.nb_quality(
+        committed, examples(args.clf_pos), examples(args.clf_neg),
+        text_col="extracted_text", id_col="url"),
+        f"{args.clf_filter}/scores")
+    kept = committed.join(
+        scores.filter(F.col("mean_llr") >= args.clf_threshold)
+        .select("url"), on="url", how="left_semi")
+    return {"threshold": args.clf_threshold,
+            **_gate(committed, kept, args.clf_filter)}
+
+
+def _domain_filter(spark, args, committed) -> dict:
+    # Per-domain curation (RefinedWeb-style cap + C4-style blocklist):
+    # the per-host profile persists next to the gated corpus so a
+    # dropped domain is always explainable.
+    from ocr_spark.operators import domains
+    blocked = _csv(args.domain_block)
+    stats = _persist(domains.domain_stats(committed, url_col="url",
+                                          text_col="extracted_text"),
+                     f"{args.domain_filter}/stats")
+    gated = committed
+    if blocked:
+        gated = domains.domain_filter(gated, blocked)
+    if args.domain_cap is not None:
+        gated = domains.domain_cap(gated, args.domain_cap)
+    gate = _gate(committed, gated, args.domain_filter)
+    return {"hosts": stats.count(), "blocked": blocked,
+            "cap": args.domain_cap, **gate}
+
+
+def _robots_filter(spark, args, committed) -> dict:
+    # Crawl-permission gate (RFC 9309): the parsed rule table persists
+    # next to the allowed corpus so every dropped url is explainable by
+    # the rule row that blocked it.
+    from ocr_spark.operators import domains
+    robots = spark.read.parquet(args.robots_txt)
+    rules = _persist(domains.robots_rules(robots, agent=args.robots_agent),
+                     f"{args.robots_filter}/rules")
+    allowed = (domains.crawl_gate(committed, rules)
+               .filter(F.col("crawl_allowed")).drop("crawl_allowed"))
+    gate = _gate(committed, allowed, args.robots_filter)
+    # The same robots table also names each host's sitemaps (RFC 9309
+    # 'other records') — the discovery edge the frontier fetches next;
+    # persisted alongside the rules.
+    maps = _persist(domains.robots_sitemaps(robots),
+                    f"{args.robots_filter}/sitemaps")
+    return {"agent": args.robots_agent,
+            "hosts_with_rules": rules.select("host").distinct().count(),
+            "rules": rules.count(), "sitemaps_discovered": maps.count(),
+            **gate}
+
+
+def _line_dedup(spark, args, committed) -> dict:
+    # Corpus-level boilerplate line removal (CCNet-style): cleaned text
+    # + per-doc removal counts persist; the one-row report rides the
+    # summary.
+    from ocr_spark.operators import textstats
+    cleaned = textstats.line_dedup(committed.select("url", "extracted_text"),
+                                   text_col="extracted_text", id_col="url")
+    # line_dedup's groupBy output carries only (url, cleaned text,
+    # n_lines_removed); re-joining the committed row keeps every
+    # metadata column, so {dir}/cleaned has the SAME schema contract as
+    # --quality-filter's {dir}/filtered and downstream curation stages
+    # can chain over it. The committed side deduplicates on url first:
+    # line_dedup emits ONE row per url, and a within-run duplicate url
+    # in the snapshot would otherwise fan the cleaned row back out
+    # (duplicate corpus rows + double-counted counters).
+    full = (committed.dropDuplicates(["url"])
+            .drop("extracted_text").join(cleaned, "url"))
+    # Counters aggregate from the PERSISTED parquet instead of re-running
+    # the whole explode/join/reassembly lineage a second time; only the
+    # hot-line count re-derives its reassembly-free aggregation.
+    r = _persist(full, f"{args.line_dedup}/cleaned").agg(
+        F.sum("n_lines_removed").alias("lines_removed"),
+        F.count_if(F.col("n_lines_removed") > 0).alias("docs_touched"))\
+        .first()
+    n_hot = textstats.hot_line_keys(
+        committed.select("url", "extracted_text"),
+        text_col="extracted_text", id_col="url").count()
+    return {"lines_removed": int(r["lines_removed"] or 0),
+            "docs_touched": int(r["docs_touched"] or 0),
+            "n_hot_lines": int(n_hot)}
+
+
+def _lm_score(spark, args, committed) -> dict:
+    # CCNet-style LM quality scoring: per-url bits/char signals persist
+    # (and optionally the <=threshold corpus).
+    from ocr_spark.operators import lmscore
+    if args.lm_ref:
+        ref = spark.read.parquet(args.lm_ref)
+        ref_col = "extracted_text" if "extracted_text" in ref.columns \
+            else "text"
+    else:
+        ref, ref_col = committed, "extracted_text"
+    model = lmscore.train_char_lm(ref, text_col=ref_col)
+    signals = _persist(lmscore.lm_score(committed, model,
+                                        text_col="extracted_text",
+                                        id_col="url"),
+                       f"{args.lm_score}/signals")
+    r = signals.agg(
+        F.count("*").alias("docs"),
+        F.round(F.avg("bits_per_char"), 3).alias("mean_bits"),
+        F.round(F.max("bits_per_char"), 3).alias("max_bits")).first()
+    out = {"docs": int(r["docs"]), "vocab": model["vocab"],
+           "mean_bits_per_char": float(r["mean_bits"] or 0.0),
+           "max_bits_per_char": float(r["max_bits"] or 0.0)}
+    if args.lm_max_bits is not None:
+        kept = committed.join(
+            signals.filter(F.col("bits_per_char") <= args.lm_max_bits)
+            .select("url"), on="url", how="left_semi")
+        out["kept"] = _persist(kept, f"{args.lm_score}/filtered").count()
+        out["dropped"] = out["docs"] - out["kept"]
+    if args.lm_buckets:
+        # CCNet head/middle/tail split over the same signals
+        # (per-language when the snapshot carries lang); sketch-based
+        # cutoffs — the corpus-scale path.
+        lang_col = "lang" if "lang" in committed.columns else None
+        scored = (signals.join(committed.select("url", "lang"), "url")
+                  if lang_col else signals)
+        buckets = _persist(lmscore.ccnet_buckets(scored, lang_col=lang_col),
+                           f"{args.lm_score}/buckets")
+        out["buckets"] = {
+            b["bucket"] or "unscored": b["n"] for b in
+            buckets.groupBy("bucket").agg(F.count("*").alias("n")).collect()}
+    return out
+
+
+def _pii_scrub(spark, args, committed) -> dict:
+    # Dolma-style PII redaction (operators/scrub.py): the scrubbed
+    # corpus keeps the committed schema plus the per-url counter, so
+    # curation stages chain over it; totals ride the summary.
+    from ocr_spark.operators import scrub
+    r = _persist(scrub.pii_scrub(committed, text_col="extracted_text"),
+                 f"{args.pii_scrub}/scrubbed").agg(
+        F.sum("n_pii_redacted").alias("redacted"),
+        F.count_if(F.col("n_pii_redacted") > 0).alias("docs_touched"),
+        F.count("*").alias("docs")).first()
+    return {"pii_redacted": int(r["redacted"] or 0),
+            "docs_touched": int(r["docs_touched"] or 0),
+            "docs": int(r["docs"])}
+
+
+def _clean_text(spark, args, committed) -> dict:
+    # Unicode normalization (CRLF fold, control strip, NFC, whitespace
+    # collapse): same chainable-schema + summary contract as
+    # --pii-scrub.
+    from ocr_spark.operators import scrub
+    r = _persist(scrub.clean_text(committed, text_col="extracted_text"),
+                 f"{args.clean_text}/cleaned").agg(
+        F.sum("n_chars_removed").alias("chars_removed"),
+        F.count_if(F.col("n_chars_removed") != 0).alias("docs_touched"),
+        F.count("*").alias("docs")).first()
+    return {"chars_removed": int(r["chars_removed"] or 0),
+            "docs_touched": int(r["docs_touched"] or 0),
+            "docs": int(r["docs"])}
+
+
+def _c4_filter(spark, args, committed) -> dict:
+    # C4 heuristic cleanup (Raffel et al. 2020): per-url signals persist
+    # next to the filtered corpus so a dropped page is always
+    # explainable. The filtered corpus carries the RETAINED lines (C4
+    # rewrites pages, not just gates them).
+    from ocr_spark.operators import textstats
+    bad = tuple(w.lower() for w in _csv(args.c4_bad_words))
+    textstats.c4_stats(committed.select("url", "extracted_text"),
+                       text_col="extracted_text", id_col="url",
+                       bad_words=bad)\
+        .drop("kept_text").write.mode("overwrite").parquet(
+            f"{args.c4_filter}/signals")
+    filtered = textstats.c4_filter(committed, text_col="extracted_text",
+                                   id_col="url", bad_words=bad)
+    return {**_gate(committed, filtered, args.c4_filter),
+            "bad_words": len(bad)}
+
+
+def _token_sample(spark, args, committed) -> dict:
+    # Deterministic token-budget subcorpus (the last curation step
+    # before training-mix assembly): sample + report persist, the
+    # report rides the summary.
+    from ocr_spark.operators import sampling
+    sample, report = sampling.token_budget_sample(
+        committed, args.token_budget, text_col="extracted_text",
+        id_col="url", salt=args.sample_salt, return_report=True)
+    sample.write.mode("overwrite").parquet(f"{args.token_sample}/sample")
+    r = _persist(report, f"{args.token_sample}/report").first()
+    return {"budget": args.token_budget, "salt": args.sample_salt,
+            **{k: int(r[k]) for k in ("total_docs", "total_tokens",
+                                      "kept_docs", "kept_tokens")}}
+
+
+def _mixture(spark, args, committed) -> dict:
+    # Training-mix assembly over the committed snapshot: the spec'd
+    # groups sampled to their token shares, everything else dropped; the
+    # per-group report is the audit trail for under-filled groups (never
+    # silently rebalanced).
+    from ocr_spark.operators import sampling
+    group_col = args.mix_group
+    if group_col not in committed.columns:
+        raise ValueError(
+            f"--mix-group {group_col!r} is not a column of the "
+            f"committed table ({committed.columns})")
+    sample, report = sampling.mixture_sample(
+        committed, _parse_mix_weights(args.mix_weights), args.mix_budget,
+        group_col=group_col, text_col="extracted_text", id_col="url",
+        salt=args.sample_salt, return_report=True)
+    sample.write.mode("overwrite").parquet(f"{args.mixture}/sample")
+    rep = _persist(report, f"{args.mixture}/report").collect()
+    return {"budget": args.mix_budget, "salt": args.sample_salt,
+            "groups": {r[group_col]: {
+                "budget_tokens": int(r["budget_tokens"]),
+                "kept_docs": int(r["kept_docs"]),
+                "kept_tokens": int(r["kept_tokens"])} for r in rep}}
+
+
+def _curate(spark, args, committed) -> dict:
+    # The whole curation recipe as ONE job: scalar gates in one
+    # pipeline, set-dependent stages over the shrinking survivor set
+    # (operators/curate.py). Decisions persist first and the
+    # funnel/survivors derive from the PERSISTED decisions, so the
+    # accounting always describes exactly the rows on disk.
+    from ocr_spark.operators import curate
+    bench = spark.read.parquet(args.benchmark) if args.benchmark else None
+    res = curate.curate(
+        committed, text_col="extracted_text", id_col="url",
+        keep_langs=tuple(_csv(args.lang_keep)),
+        c4_bad_words=tuple(_csv(args.c4_bad_words)),
+        repair_lines=args.curate_repair,
+        max_bucket=args.neardup_max_bucket,
+        benchmark=bench, decontam_ngram=args.decontam_ngram,
+        decontam_min_hits=args.decontam_min_hits,
+        # Durable stage boundary (also keeps the clean-text pandas UDF
+        # fed from a bare parquet column — the python-exchange
+        # projection pathology).
+        materialize=lambda d, name: _persist(
+            d, f"{args.curate}/stage_{name}"))
+    decisions = _persist(res["decisions"], f"{args.curate}/decisions")
+    (decisions.filter("final_keep")
+     .select("url", F.col("curated_text").alias("extracted_text"))
+     .write.mode("overwrite").parquet(f"{args.curate}/survivors"))
+    funnel = _persist(curate.funnel_counts(
+        decisions, with_repair=args.curate_repair,
+        with_decontam=bench is not None), f"{args.curate}/funnel")
+    return {r["stage"]: {"in": r["docs_in"], "out": r["docs_out"]}
+            for r in funnel.orderBy("stage_idx").collect()}
+
+
+#: The stages that read the committed snapshot, in run order: a stage
+#: runs when its flag is given, and its result is the summary entry
+#: under the flag's dest.
+_STAGES = (
+    ("write_wet", _write_wet),
+    ("bm25_index", _bm25_index),
+    ("bpe_train", _bpe_train),
+    ("neardup", _neardup),
+    ("dedup_apply", _dedup_apply),
+    ("quality_filter", _quality_filter),
+    ("lang_filter", _lang_filter),
+    ("shard", _shard),
+    ("decontam", _decontam),
+    ("substr_dedup", _substr_dedup),
+    ("clf_filter", _clf_filter),
+    ("domain_filter", _domain_filter),
+    ("robots_filter", _robots_filter),
+    ("line_dedup", _line_dedup),
+    ("lm_score", _lm_score),
+    ("pii_scrub", _pii_scrub),
+    ("clean_text", _clean_text),
+    ("c4_filter", _c4_filter),
+    ("token_sample", _token_sample),
+    ("mixture", _mixture),
+    ("curate", _curate),
+)
 
 
 def main(argv=None, spark=None) -> dict:
@@ -606,8 +1107,6 @@ def main(argv=None, spark=None) -> dict:
     if args.input:
         input_df = spark.read.parquet(args.input)
     elif args.warc:
-        from pyspark.sql import functions as F
-
         from ocr_spark.sources import warc
         # Malformed-record casualties must surface in the summary
         # (same never-silent contract as the LSH drop counters); the
@@ -632,9 +1131,7 @@ def main(argv=None, spark=None) -> dict:
         result = run_with_checkpoint(
             spark, input_df, table_root, run_id=run_id,
             num_partitions=args.partitions,
-            partition_by=([c.strip() for c in args.partition_by.split(",")
-                           if c.strip()]
-                          if args.partition_by else None))
+            partition_by=_csv(args.partition_by) or None)
 
         if args.metrics and result["processed"] > 0:
             out = spark.read.parquet(table.run_dir(run_id))
@@ -647,762 +1144,13 @@ def main(argv=None, spark=None) -> dict:
         summary["warc_records_skipped"] = int(warc_skips.value)
 
     if args.outlinks:
-        # WAT-style link layer next to the text extraction: the link
-        # table comes from the INPUT pages (html never reaches the
-        # committed text table), the host graph and rank from the
-        # persisted links — so host_rank reads parquet, not a
-        # re-extraction.
-        from ocr_spark.operators import webgraph
-        if "html" not in input_df.columns or "url" not in input_df.columns:
-            raise ValueError(
-                "--outlinks needs (url, html) on the input source; "
-                f"got columns {input_df.columns}")
-        links = webgraph.extract_outlinks(
-            input_df.select("url", "html"),
-            num_partitions=args.partitions)
-        links.write.mode("overwrite").parquet(f"{args.outlinks}/links")
-        links = spark.read.parquet(f"{args.outlinks}/links")
-        edges = webgraph.host_edges(links)
-        edges.write.mode("overwrite").parquet(
-            f"{args.outlinks}/host_edges")
-        edges = spark.read.parquet(f"{args.outlinks}/host_edges")
-        webgraph.host_rank(edges, iters=args.host_rank_iters)\
-            .write.mode("overwrite").parquet(f"{args.outlinks}/host_rank")
-        summary["outlinks"] = {
-            "links": links.count(),
-            "nofollow_links": links.filter("nofollow").count(),
-            "host_edges": edges.count(),
-            "hosts_ranked": spark.read.parquet(
-                f"{args.outlinks}/host_rank").count()}
+        summary["outlinks"] = _outlinks(spark, args, input_df)
 
-    if args.write_wet:
-        # Publish the extracted corpus back in the crawl's own
-        # container format: WET conversion records any downstream WET
-        # consumer (including this repo's --warc source) reads
-        # unchanged. Executors write the segment files; the driver
-        # only persists the num_segments-row manifest. Deterministic
-        # bytes (content-addressed segments, sorted rows, mtime-0
-        # gzip) make a re-run or task retry install identical files.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.sources import warc as warc_mod
-        committed = table.read(spark)
-        if committed is not None:
-            pages = committed.select(
-                "url", "warc_ts",
-                F.col("extracted_text").alias("text"), "lang")
-            man = warc_mod.write_wet(pages, f"{args.write_wet}/segments",
-                                     num_segments=args.wet_segments)
-            man.write.mode("overwrite").parquet(
-                f"{args.write_wet}/manifest")
-            man = spark.read.parquet(f"{args.write_wet}/manifest")
-            agg = man.agg(
-                F.count("*").alias("segments"),
-                F.sum("n_records").alias("records"),
-                F.sum("n_bytes").alias("bytes"),
-                F.sum("n_skipped").alias("skipped")).first()
-            summary["write_wet"] = {
-                "segments": int(agg["segments"] or 0),
-                "records": int(agg["records"] or 0),
-                "bytes": int(agg["bytes"] or 0),
-                "skipped": int(agg["skipped"] or 0)}
-
-    if args.bm25_index:
-        # Inverted-index layer over the committed extraction output:
-        # postings/terms partitioned by term-hash bucket (file-level
-        # prune at search time), meta as one row. Searches, if asked,
-        # run against the on-disk layout — the same path a separate
-        # search job would take — never against the in-session frames.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import search as search_mod
-        committed = table.read(spark)
-        if committed is not None:
-            corpus = committed.select(
-                "url", F.col("extracted_text").alias("text"))
-            search_mod.bm25_write_index(
-                corpus, args.bm25_index, buckets=args.bm25_buckets,
-                id_col="url")
-            meta = spark.read.parquet(f"{args.bm25_index}/meta").first()
-            summary["bm25_index"] = {
-                "docs": int(meta["n_docs"]),
-                "avgdl": round(float(meta["avgdl"] or 0.0), 2),
-                "buckets": args.bm25_buckets}
-            if args.bm25_query:
-                queries = spark.createDataFrame(
-                    list(enumerate(args.bm25_query)),
-                    "query_id int, query_text string")
-                hits = search_mod.bm25_search_index(
-                    spark, args.bm25_index, queries, k=10,
-                    buckets=args.bm25_buckets, id_col="url")
-                hits.write.mode("overwrite").parquet(
-                    f"{args.bm25_index}/hits")
-                summary["bm25_index"]["queries"] = len(args.bm25_query)
-                summary["bm25_index"]["hits"] = spark.read.parquet(
-                    f"{args.bm25_index}/hits").count()
-
-    if args.bpe_train:
-        # Tokenizer layer: the merge table is the persistable artifact
-        # (what a training run ships alongside the corpus); the encode
-        # pass runs the Arrow production path — the expression encoder
-        # is for bounded oracle-able tables, not 256-merge jobs.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import bpe as bpe_mod
-        committed = table.read(spark)
-        if committed is not None:
-            corpus = committed.select(
-                "url", F.col("extracted_text").alias("text"))
-            merges = bpe_mod.bpe_train(
-                corpus, num_merges=args.bpe_merges, id_col="url")
-            bpe_mod.merges_df(spark, merges).write.mode(
-                "overwrite").parquet(f"{args.bpe_train}/merges")
-            encoded = bpe_mod.bpe_encode_arrow(corpus, merges,
-                                               id_col="url")
-            encoded.select("url", "n_bpe_tokens").write.mode(
-                "overwrite").parquet(f"{args.bpe_train}/encoded")
-            enc = spark.read.parquet(f"{args.bpe_train}/encoded")
-            agg = enc.agg(F.count("*").alias("docs"),
-                          F.sum("n_bpe_tokens").alias("toks")).first()
-            summary["bpe_train"] = {
-                "merges": len(merges),
-                "docs_encoded": int(agg["docs"]),
-                "bpe_tokens": int(agg["toks"] or 0)}
-
-    if args.neardup:
-        # Optional curation stage over the whole committed table. The
-        # hot-bucket cap drops degenerate buckets (dedup.cap_buckets);
-        # a capped run must SAY what it capped, so the drop counters are
-        # persisted next to the pairs and surfaced in the summary.
-        from ocr_spark.operators import dedup
-        committed = table.read(spark)
-        if committed is not None:
-            # Any of the three text-side pair generators feeds the same
-            # pairs/resolve/apply tail — they share the (id_a, id_b)
-            # contract and the one-row bucket_report shape.
-            coverage = {}
-
-            def _embedding_sidecar(d):
-                # The committed snapshot carries no vectors; an
-                # embeddings sidecar table joins in by url (semi-join so
-                # uncommitted or stale vectors never create pairs; one
-                # row per url so an append-built sidecar can't fan
-                # pairs out). Coverage is counted: docs the sidecar
-                # MISSES can never pair, and a silent gap would violate
-                # this stage's never-silent contract.
-                emb = (spark.read.parquet(args.embeddings)
-                       .dropDuplicates(["url"])
-                       .join(d.select("url"), "url", "left_semi"))
-                coverage["docs_with_embeddings"] = emb.count()
-                coverage["docs_missing_embeddings"] = (
-                    d.count() - coverage["docs_with_embeddings"])
-                return emb
-
-            def _embedding_pairs(d):
-                from ocr_spark.operators import similarity
-                return similarity.embedding_near_dup_pairs(
-                    _embedding_sidecar(d), id_col="url",
-                    vec_col="embedding",
-                    max_bucket=args.neardup_max_bucket,
-                    return_report=True)
-
-            def _semantic_pairs(d):
-                # SemDeDup (Abbas et al. 2023): learned k-means cells
-                # instead of LSH buckets; same sidecar contract and the
-                # same (id_a, id_b) + bucket_report shape downstream.
-                from ocr_spark.operators import similarity
-                return similarity.semantic_dedup_pairs(
-                    _embedding_sidecar(d), id_col="url",
-                    vec_col="embedding",
-                    max_cell=args.neardup_max_bucket,
-                    return_report=True)
-
-            generators = {
-                "minhash": lambda d: dedup.minhash_lsh_pairs(
-                    d, text_col="extracted_text", id_col="url",
-                    hash_mode="poly",
-                    max_bucket=args.neardup_max_bucket,
-                    return_report=True),
-                "simhash": lambda d: dedup.simhash_pairs(
-                    d, text_col="extracted_text", id_col="url",
-                    max_bucket=args.neardup_max_bucket,
-                    return_report=True),
-                "ngram": lambda d: dedup.ngram_jaccard_pairs(
-                    d, text_col="extracted_text", id_col="url",
-                    max_bucket=args.neardup_max_bucket,
-                    return_report=True),
-                "embedding": _embedding_pairs,
-                "semantic": _semantic_pairs,
-            }
-            pairs, report = generators[args.neardup_method](
-                committed.select("url", "extracted_text"))
-            pairs.write.mode("overwrite").parquet(f"{args.neardup}/pairs")
-            report.write.mode("overwrite").parquet(
-                f"{args.neardup}/bucket_report")
-            rep = spark.read.parquet(f"{args.neardup}/bucket_report").first()
-            summary["neardup"] = {
-                "method": args.neardup_method,
-                "pairs": spark.read.parquet(f"{args.neardup}/pairs").count(),
-                **coverage,
-                **{k: int(rep[k]) for k in
-                   ("n_buckets", "max_bucket_size", "n_hot_buckets",
-                    "rows_dropped", "max_bucket")}}
-            if args.dedup_apply:
-                # Pairs are analytics; DECISIONS shrink the corpus:
-                # components -> one survivor per cluster -> anti-join
-                # the losers out. Both tables persist so a downstream
-                # job (or a resumed one) applies the same decisions.
-                committed_pairs = spark.read.parquet(
-                    f"{args.neardup}/pairs")
-                resolved = dedup.dedup_resolve(
-                    committed_pairs, docs=committed, id_col="url")
-                resolved.write.mode("overwrite").parquet(
-                    f"{args.dedup_apply}/resolved")
-                resolved = spark.read.parquet(
-                    f"{args.dedup_apply}/resolved")
-                survivors = dedup.dedup_apply(committed, resolved,
-                                              id_col="url")
-                survivors.write.mode("overwrite").parquet(
-                    f"{args.dedup_apply}/survivors")
-                n_docs = committed.count()
-                n_kept = spark.read.parquet(
-                    f"{args.dedup_apply}/survivors").count()
-                summary["dedup_apply"] = {
-                    "docs": n_docs, "survivors": n_kept,
-                    "dropped": n_docs - n_kept,
-                    "clusters": resolved.filter("keep").count()}
-
-    if args.quality_filter:
-        # Gopher-style repetition gate (textstats; Rae et al. 2021
-        # thresholds): the signals table persists next to the filtered
-        # corpus so a dropped page is always explainable.
-        from ocr_spark.operators import textstats
-        committed = table.read(spark)
-        if committed is not None:
-            rep = (textstats.repetition_stats_full if args.gopher_full
-                   else textstats.repetition_stats)
-            stats = rep(
-                committed.select("url", "extracted_text"),
-                text_col="extracted_text", id_col="url")
-            stats.write.mode("overwrite").parquet(
-                f"{args.quality_filter}/signals")
-            stats = spark.read.parquet(f"{args.quality_filter}/signals")
-            kept = committed.join(stats.filter("keep").select("url"),
-                                  on="url", how="left_semi")
-            kept.write.mode("overwrite").parquet(
-                f"{args.quality_filter}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.quality_filter}/filtered").count()
-            summary["quality_filter"] = {
-                "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept}
-
-    if args.lang_filter:
-        # Language gate (the standard first curation stage of a webtext
-        # pipeline — CCNet/Gopher both lead with it): per-url signals
-        # persist next to the filtered corpus so a dropped page is
-        # always explainable, same contract as --quality-filter.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import textstats
-        committed = table.read(spark)
-        if committed is not None:
-            keep_langs = [c.strip() for c in args.lang_keep.split(",")
-                          if c.strip()]
-            # with_lang_guess, not the Column form: the landed token
-            # array evaluates the normalize+split once per document
-            # instead of ~L^2 times (textstats.lang_id PERF WARNING).
-            signals = textstats.with_lang_guess(
-                committed, "extracted_text").select("url", "lang_guess")
-            signals.write.mode("overwrite").parquet(
-                f"{args.lang_filter}/signals")
-            signals = spark.read.parquet(f"{args.lang_filter}/signals")
-            kept = committed.join(
-                signals.filter(F.col("lang_guess").isin(keep_langs))
-                .select("url"), on="url", how="left_semi")
-            kept.write.mode("overwrite").parquet(
-                f"{args.lang_filter}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.lang_filter}/filtered").count()
-            summary["lang_filter"] = {
-                "keep": keep_langs, "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept}
-
-    if args.shard:
-        # Deterministic fixed-token training shards (the layout
-        # training loaders consume): Hive-partitioned shard=K/ dirs +
-        # a per-shard (docs, tokens) manifest. Reproducible from
-        # (--shard-tokens, salt=0) alone.
-        from ocr_spark.operators import sampling
-        committed = table.read(spark)
-        if committed is not None:
-            sampling.write_token_shards(
-                committed, args.shard, args.shard_tokens,
-                text_col="extracted_text", id_col="url")
-            rows = spark.read.parquet(f"{args.shard}/_manifest")\
-                .orderBy("shard").collect()
-            summary["shard"] = {
-                "tokens_per_shard": args.shard_tokens,
-                "n_shards": len(rows),
-                "total_tokens": sum(int(r["tokens"]) for r in rows),
-                "total_docs": sum(int(r["docs"]) for r in rows)}
-
-    if args.decontam:
-        # Benchmark decontamination (Brown et al. 2020 Appendix C):
-        # the per-url hit counts persist next to the decontaminated
-        # corpus so a dropped page is always explainable — same
-        # never-silent contract as the other gates.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import decontam as decontam_ops
-        committed = table.read(spark)
-        if committed is not None:
-            bench = spark.read.parquet(args.benchmark)
-            hits = decontam_ops.contamination(
-                committed, bench, n=args.decontam_ngram,
-                text_col="extracted_text", id_col="url",
-                bench_text_col="text")
-            hits.write.mode("overwrite").parquet(f"{args.decontam}/hits")
-            hits = spark.read.parquet(f"{args.decontam}/hits")
-            bad = hits.filter(
-                F.col("hit_count") >= args.decontam_min_hits)
-            kept = committed.join(bad.select("url"), on="url",
-                                  how="left_anti")
-            kept.write.mode("overwrite").parquet(
-                f"{args.decontam}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.decontam}/filtered").count()
-            summary["decontam"] = {
-                "ngram": args.decontam_ngram,
-                "min_hits": args.decontam_min_hits,
-                "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept,
-                "contaminated": bad.count()}
-
-    if args.substr_dedup:
-        # Intra-corpus exact-substring dedup (Lee et al. 2021):
-        # keep-first by url; the per-url span stats persist next to
-        # the survivor corpus — never-silent like the other gates.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import decontam as decontam_ops
-        committed = table.read(spark)
-        if committed is not None:
-            stats = decontam_ops.substring_duplication(
-                committed, n=args.substr_ngram,
-                text_col="extracted_text", id_col="url",
-                sample_mod=args.substr_sample)
-            stats.write.mode("overwrite").parquet(
-                f"{args.substr_dedup}/spans")
-            stats = spark.read.parquet(f"{args.substr_dedup}/spans")
-            bad = stats.filter(
-                F.col("dup_fraction") > args.substr_max_frac)
-            kept = committed.join(bad.select("url"), on="url",
-                                  how="left_anti")
-            kept.write.mode("overwrite").parquet(
-                f"{args.substr_dedup}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.substr_dedup}/filtered").count()
-            summary["substr_dedup"] = {
-                "ngram": args.substr_ngram,
-                "max_frac": args.substr_max_frac,
-                "sample_mod": args.substr_sample,
-                "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept}
-
-    if args.clf_filter:
-        # Model-based quality filtering (DCLM/FineWeb-style): the
-        # closed-form NB model trains on the labeled sidecars, every
-        # committed doc's score persists next to the filtered corpus.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import qualityclf
-        committed = table.read(spark)
-        if committed is not None:
-            # Sidecar examples carry 'text'; the snapshot carries
-            # 'extracted_text' — fold both onto the snapshot's name.
-            pos = (spark.read.parquet(args.clf_pos)
-                   .select(F.col("text").alias("extracted_text")))
-            neg = (spark.read.parquet(args.clf_neg)
-                   .select(F.col("text").alias("extracted_text")))
-            scores = qualityclf.nb_quality(
-                committed, pos, neg,
-                text_col="extracted_text", id_col="url")
-            scores.write.mode("overwrite").parquet(
-                f"{args.clf_filter}/scores")
-            scores = spark.read.parquet(f"{args.clf_filter}/scores")
-            keep = scores.filter(
-                F.col("mean_llr") >= args.clf_threshold)
-            kept = committed.join(keep.select("url"), on="url",
-                                  how="left_semi")
-            kept.write.mode("overwrite").parquet(
-                f"{args.clf_filter}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.clf_filter}/filtered").count()
-            summary["clf_filter"] = {
-                "threshold": args.clf_threshold,
-                "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept}
-
-    if args.domain_filter:
-        # Per-domain curation (RefinedWeb-style cap + C4-style
-        # blocklist): the per-host profile persists next to the gated
-        # corpus so a dropped domain is always explainable — same
-        # never-silent contract as the other stages.
-        from ocr_spark.operators import domains
-        committed = table.read(spark)
-        if committed is not None:
-            blocked = ([b.strip() for b in args.domain_block.split(",")
-                        if b.strip()] if args.domain_block else [])
-            stats = domains.domain_stats(committed, url_col="url",
-                                         text_col="extracted_text")
-            stats.write.mode("overwrite").parquet(
-                f"{args.domain_filter}/stats")
-            gated = committed
-            if blocked:
-                gated = domains.domain_filter(gated, blocked)
-            if args.domain_cap is not None:
-                gated = domains.domain_cap(gated, args.domain_cap)
-            gated.write.mode("overwrite").parquet(
-                f"{args.domain_filter}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.domain_filter}/filtered").count()
-            n_hosts = spark.read.parquet(
-                f"{args.domain_filter}/stats").count()
-            summary["domain_filter"] = {
-                "hosts": n_hosts, "blocked": blocked,
-                "cap": args.domain_cap, "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept}
-
-    if args.robots_filter:
-        # Crawl-permission gate (RFC 9309): the parsed rule table
-        # persists next to the allowed corpus so every dropped url is
-        # explainable by the rule row that blocked it — same
-        # never-silent contract as the other curation stages.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import domains
-        committed = table.read(spark)
-        if committed is not None:
-            robots = spark.read.parquet(args.robots_txt)
-            rules = domains.robots_rules(robots, agent=args.robots_agent)
-            rules.write.mode("overwrite").parquet(
-                f"{args.robots_filter}/rules")
-            rules = spark.read.parquet(f"{args.robots_filter}/rules")
-            gated = domains.crawl_gate(committed, rules)
-            (gated.filter(F.col("crawl_allowed"))
-             .drop("crawl_allowed")
-             .write.mode("overwrite")
-             .parquet(f"{args.robots_filter}/filtered"))
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.robots_filter}/filtered").count()
-            # The same robots table also names each host's sitemaps
-            # (RFC 9309 'other records') — the discovery edge the
-            # frontier fetches next; persisted alongside the rules.
-            maps = domains.robots_sitemaps(robots)
-            maps.write.mode("overwrite").parquet(
-                f"{args.robots_filter}/sitemaps")
-            summary["robots_filter"] = {
-                "agent": args.robots_agent,
-                "hosts_with_rules": rules.select("host").distinct().count(),
-                "rules": rules.count(),
-                "sitemaps_discovered": spark.read.parquet(
-                    f"{args.robots_filter}/sitemaps").count(),
-                "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept}
-
-    if args.line_dedup:
-        # Corpus-level boilerplate line removal (CCNet-style): cleaned
-        # text + per-doc removal counts persist; the one-row report
-        # rides the summary (never-silent contract).
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import textstats
-        committed = table.read(spark)
-        if committed is not None:
-            cleaned = textstats.line_dedup(
-                committed.select("url", "extracted_text"),
-                text_col="extracted_text", id_col="url")
-            # line_dedup's groupBy output carries only (url, cleaned
-            # text, n_lines_removed); re-joining the committed row keeps
-            # every metadata column, so {dir}/cleaned has the SAME
-            # schema contract as --quality-filter's {dir}/filtered and
-            # downstream curation stages can chain over it. The
-            # committed side deduplicates on url first: line_dedup
-            # emits ONE row per url, and a within-run duplicate url in
-            # the snapshot would otherwise fan the cleaned row back out
-            # (duplicate corpus rows + double-counted counters).
-            full = (committed.dropDuplicates(["url"])
-                    .drop("extracted_text").join(cleaned, "url"))
-            full.write.mode("overwrite").parquet(
-                f"{args.line_dedup}/cleaned")
-            # Counters aggregate from the PERSISTED parquet (the
-            # sibling stages' pattern) instead of re-running the whole
-            # explode/join/reassembly lineage a second time; only the
-            # hot-line count re-derives its reassembly-free aggregation.
-            back = spark.read.parquet(f"{args.line_dedup}/cleaned")
-            r = back.agg(
-                F.sum("n_lines_removed").alias("lines_removed"),
-                F.count_if(F.col("n_lines_removed") > 0)
-                .alias("docs_touched")).first()
-            n_hot = textstats.hot_line_keys(
-                committed.select("url", "extracted_text"),
-                text_col="extracted_text", id_col="url").count()
-            summary["line_dedup"] = {
-                "lines_removed": int(r["lines_removed"] or 0),
-                "docs_touched": int(r["docs_touched"] or 0),
-                "n_hot_lines": int(n_hot)}
-
-    if args.lm_score:
-        # CCNet-style LM quality scoring: per-url bits/char signals
-        # persist (and optionally the <=threshold corpus) — same
-        # explainable-drop contract as the other quality gates.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import lmscore
-        committed = table.read(spark)
-        if committed is not None:
-            if args.lm_ref:
-                ref = spark.read.parquet(args.lm_ref)
-                ref_col = ("extracted_text" if "extracted_text"
-                           in ref.columns else "text")
-            else:
-                ref, ref_col = committed, "extracted_text"
-            model = lmscore.train_char_lm(ref, text_col=ref_col)
-            signals = lmscore.lm_score(committed, model,
-                                       text_col="extracted_text",
-                                       id_col="url")
-            signals.write.mode("overwrite").parquet(
-                f"{args.lm_score}/signals")
-            signals = spark.read.parquet(f"{args.lm_score}/signals")
-            r = signals.agg(
-                F.count("*").alias("docs"),
-                F.round(F.avg("bits_per_char"), 3).alias("mean_bits"),
-                F.round(F.max("bits_per_char"), 3).alias("max_bits"))\
-                .first()
-            summary["lm_score"] = {
-                "docs": int(r["docs"]), "vocab": model["vocab"],
-                "mean_bits_per_char": float(r["mean_bits"] or 0.0),
-                "max_bits_per_char": float(r["max_bits"] or 0.0)}
-            if args.lm_max_bits is not None:
-                kept = committed.join(
-                    signals.filter(
-                        F.col("bits_per_char") <= args.lm_max_bits)
-                    .select("url"), on="url", how="left_semi")
-                kept.write.mode("overwrite").parquet(
-                    f"{args.lm_score}/filtered")
-                n_kept = spark.read.parquet(
-                    f"{args.lm_score}/filtered").count()
-                summary["lm_score"]["kept"] = n_kept
-                summary["lm_score"]["dropped"] = int(r["docs"]) - n_kept
-            if args.lm_buckets:
-                # CCNet head/middle/tail split over the same signals
-                # (per-language when the snapshot carries lang);
-                # sketch-based cutoffs — the corpus-scale path.
-                lang_col = "lang" if "lang" in committed.columns else None
-                scored = signals
-                if lang_col:
-                    scored = signals.join(
-                        committed.select("url", "lang"), "url")
-                buckets = lmscore.ccnet_buckets(scored,
-                                                lang_col=lang_col)
-                buckets.write.mode("overwrite").parquet(
-                    f"{args.lm_score}/buckets")
-                counts = {b["bucket"] or "unscored": b["n"]
-                          for b in spark.read.parquet(
-                              f"{args.lm_score}/buckets")
-                          .groupBy("bucket")
-                          .agg(F.count("*").alias("n")).collect()}
-                summary["lm_score"]["buckets"] = counts
-
-    if args.pii_scrub:
-        # Dolma-style PII redaction (operators/scrub.py): the scrubbed
-        # corpus keeps the committed schema plus the per-url counter,
-        # so curation stages chain over it; totals ride the summary
-        # (never-silent contract).
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import scrub
-        committed = table.read(spark)
-        if committed is not None:
-            scrubbed = scrub.pii_scrub(committed,
-                                       text_col="extracted_text")
-            scrubbed.write.mode("overwrite").parquet(
-                f"{args.pii_scrub}/scrubbed")
-            back = spark.read.parquet(f"{args.pii_scrub}/scrubbed")
-            r = back.agg(
-                F.sum("n_pii_redacted").alias("redacted"),
-                F.count_if(F.col("n_pii_redacted") > 0)
-                .alias("docs_touched"),
-                F.count("*").alias("docs")).first()
-            summary["pii_scrub"] = {
-                "pii_redacted": int(r["redacted"] or 0),
-                "docs_touched": int(r["docs_touched"] or 0),
-                "docs": int(r["docs"])}
-
-    if args.clean_text:
-        # Unicode normalization (CRLF fold, control strip, NFC,
-        # whitespace collapse): same chainable-schema + summary
-        # contract as --pii-scrub.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import scrub
-        committed = table.read(spark)
-        if committed is not None:
-            cleaned = scrub.clean_text(committed,
-                                       text_col="extracted_text")
-            cleaned.write.mode("overwrite").parquet(
-                f"{args.clean_text}/cleaned")
-            back = spark.read.parquet(f"{args.clean_text}/cleaned")
-            r = back.agg(
-                F.sum("n_chars_removed").alias("chars_removed"),
-                F.count_if(F.col("n_chars_removed") != 0)
-                .alias("docs_touched"),
-                F.count("*").alias("docs")).first()
-            summary["clean_text"] = {
-                "chars_removed": int(r["chars_removed"] or 0),
-                "docs_touched": int(r["docs_touched"] or 0),
-                "docs": int(r["docs"])}
-
-    if args.c4_filter:
-        # C4 heuristic cleanup (Raffel et al. 2020): per-url signals
-        # persist next to the filtered corpus so a dropped page is
-        # always explainable — same contract as --quality-filter. The
-        # filtered corpus carries the RETAINED lines (C4 rewrites
-        # pages, not just gates them).
-        from ocr_spark.operators import textstats
-        committed = table.read(spark)
-        if committed is not None:
-            bad = tuple(w.strip().lower()
-                        for w in (args.c4_bad_words or "").split(",")
-                        if w.strip())
-            stats = textstats.c4_stats(
-                committed.select("url", "extracted_text"),
-                text_col="extracted_text", id_col="url", bad_words=bad)
-            stats.drop("kept_text").write.mode("overwrite").parquet(
-                f"{args.c4_filter}/signals")
-            filtered = textstats.c4_filter(
-                committed, text_col="extracted_text", id_col="url",
-                bad_words=bad)
-            filtered.write.mode("overwrite").parquet(
-                f"{args.c4_filter}/filtered")
-            n_docs = committed.count()
-            n_kept = spark.read.parquet(
-                f"{args.c4_filter}/filtered").count()
-            summary["c4_filter"] = {
-                "docs": n_docs, "kept": n_kept,
-                "dropped": n_docs - n_kept,
-                "bad_words": len(bad)}
-
-    if args.token_sample:
-        # Deterministic token-budget subcorpus (the last curation step
-        # before training-mix assembly): sample + report persist, the
-        # report rides the summary.
-        from ocr_spark.operators import sampling
-        committed = table.read(spark)
-        if committed is not None:
-            sample, report = sampling.token_budget_sample(
-                committed, args.token_budget,
-                text_col="extracted_text", id_col="url",
-                salt=args.sample_salt, return_report=True)
-            sample.write.mode("overwrite").parquet(
-                f"{args.token_sample}/sample")
-            report.write.mode("overwrite").parquet(
-                f"{args.token_sample}/report")
-            r = spark.read.parquet(f"{args.token_sample}/report").first()
-            summary["token_sample"] = {
-                "budget": args.token_budget,
-                "salt": args.sample_salt,
-                **{k: int(r[k]) for k in ("total_docs", "total_tokens",
-                                          "kept_docs", "kept_tokens")}}
-
-    if args.mixture:
-        # Training-mix assembly over the committed snapshot: the
-        # spec'd groups sampled to their token shares, everything
-        # else dropped; the per-group report is the audit trail for
-        # under-filled groups (never silently rebalanced).
-        from ocr_spark.operators import sampling
-        committed = table.read(spark)
-        if committed is not None:
-            group_col = args.mix_group
-            if group_col not in committed.columns:
-                raise ValueError(
-                    f"--mix-group {group_col!r} is not a column of the "
-                    f"committed table ({committed.columns})")
-            sample, report = sampling.mixture_sample(
-                committed, _parse_mix_weights(args.mix_weights),
-                args.mix_budget,
-                group_col=group_col, text_col="extracted_text",
-                id_col="url", salt=args.sample_salt,
-                return_report=True)
-            sample.write.mode("overwrite").parquet(
-                f"{args.mixture}/sample")
-            report.write.mode("overwrite").parquet(
-                f"{args.mixture}/report")
-            rep = spark.read.parquet(f"{args.mixture}/report").collect()
-            summary["mixture"] = {
-                "budget": args.mix_budget, "salt": args.sample_salt,
-                "groups": {r[group_col]: {
-                    "budget_tokens": int(r["budget_tokens"]),
-                    "kept_docs": int(r["kept_docs"]),
-                    "kept_tokens": int(r["kept_tokens"])} for r in rep}}
-
-    if args.curate:
-        # The whole curation recipe as ONE job: scalar gates in one
-        # pipeline, set-dependent stages over the shrinking survivor
-        # set (operators/curate.py). Decisions persist first and the
-        # funnel/survivors derive from the PERSISTED decisions, so the
-        # accounting always describes exactly the rows on disk.
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators import curate as curate_ops
-        committed = table.read(spark)
-        if committed is not None:
-
-            def _mat(d, name):
-                # Durable stage boundary (also keeps the clean-text
-                # pandas UDF fed from a bare parquet column — the
-                # python-exchange projection pathology).
-                p = f"{args.curate}/stage_{name}"
-                d.write.mode("overwrite").parquet(p)
-                return spark.read.parquet(p)
-
-            bench = (spark.read.parquet(args.benchmark)
-                     if args.benchmark else None)
-            bad_words = tuple(
-                w.strip() for w in (args.c4_bad_words or "").split(",")
-                if w.strip())
-            keep_langs = tuple(c.strip() for c in args.lang_keep.split(",")
-                               if c.strip())
-            res = curate_ops.curate(
-                committed, text_col="extracted_text", id_col="url",
-                keep_langs=keep_langs, c4_bad_words=bad_words,
-                repair_lines=args.curate_repair,
-                max_bucket=args.neardup_max_bucket,
-                benchmark=bench, decontam_ngram=args.decontam_ngram,
-                decontam_min_hits=args.decontam_min_hits,
-                materialize=_mat)
-            res["decisions"].write.mode("overwrite").parquet(
-                f"{args.curate}/decisions")
-            decisions = spark.read.parquet(f"{args.curate}/decisions")
-            (decisions.filter("final_keep")
-             .select("url", F.col("curated_text").alias("extracted_text"))
-             .write.mode("overwrite").parquet(f"{args.curate}/survivors"))
-            curate_ops.funnel_counts(
-                decisions, with_repair=args.curate_repair,
-                with_decontam=bench is not None)\
-                .write.mode("overwrite").parquet(f"{args.curate}/funnel")
-            summary["curate"] = {
-                r["stage"]: {"in": r["docs_in"], "out": r["docs_out"]}
-                for r in spark.read.parquet(f"{args.curate}/funnel")
-                .orderBy("stage_idx").collect()}
+    stages = [(dest, fn) for dest, fn in _STAGES if getattr(args, dest)]
+    committed = table.read(spark) if stages else None
+    if committed is not None:
+        for dest, fn in stages:
+            summary[dest] = fn(spark, args, committed)
 
     if args.compact:
         # After ingest + curation: fold the accrued per-run dirs into
@@ -1415,7 +1163,6 @@ def main(argv=None, spark=None) -> dict:
         elif len(head["data_dirs"]) == 1:
             summary["compact"] = {"skipped": "already one data dir"}
         else:
-            from pyspark.sql import functions as F
             n_dirs = len(head["data_dirs"])
             snap = table.compact(
                 spark, run_id=f"compact-{head['sequence'] + 1:06d}",

@@ -564,17 +564,11 @@ def test_job_neardup_semantic_method(spark, tmp_path):
 
 
 def test_job_flag_dependency_and_lang_keep_validation(tmp_path):
-    """Orphaned stage flags and unknown --lang-keep codes are usage
-    errors at parse time, not silent no-ops or corpus deletions."""
+    """Unknown --lang-keep codes are usage errors at parse time, not
+    silent corpus deletions."""
     import pytest
 
     t = str(tmp_path / "t")
-    with pytest.raises(SystemExit):  # method without the stage
-        job._parse(["--synth", "4", "--table", t,
-                    "--neardup-method", "simhash"])
-    with pytest.raises(SystemExit):  # sidecar without the stage
-        job._parse(["--synth", "4", "--table", t,
-                    "--embeddings", str(tmp_path / "e.parquet")])
     with pytest.raises(SystemExit):  # unknown language code
         job._parse(["--synth", "4", "--table", t,
                     "--lang-filter", str(tmp_path / "lf"),
@@ -645,8 +639,6 @@ def test_job_maintenance_flag_validation(tmp_path):
     t = str(tmp_path / "t")
     with pytest.raises(SystemExit):  # no source and no maintenance op
         job._parse(["--table", t])
-    with pytest.raises(SystemExit):  # partitions without --compact
-        job._parse(["--table", t, "--compact-partitions", "2"])
     with pytest.raises(SystemExit):  # would drop the head snapshot
         job._parse(["--table", t, "--expire-keep", "0"])
     args = job._parse(["--table", t, "--compact"])
@@ -717,13 +709,10 @@ def test_job_decontam_drops_benchmark_overlap(spark, tmp_path):
 
 
 def test_job_decontam_flag_validation(tmp_path):
-    """Orphaned decontamination flags are usage errors, and --decontam
-    without a benchmark is too."""
+    """--decontam without a benchmark is a usage error, and so is an
+    out-of-range shingle width."""
     base = ["--synth", "4", "--table", str(tmp_path / "t")]
-    for extra in (["--benchmark", "x.parquet"],
-                  ["--decontam-ngram", "8"],
-                  ["--decontam-min-hits", "2"],
-                  ["--decontam", str(tmp_path / "dc")],
+    for extra in (["--decontam", str(tmp_path / "dc")],
                   ["--decontam", str(tmp_path / "dc"),
                    "--benchmark", "x.parquet", "--decontam-ngram", "1"]):
         with pytest.raises(SystemExit):
@@ -751,7 +740,7 @@ def test_job_substr_dedup_drops_recombinations(spark, tmp_path):
     r = job.main(["--input", inp, "--table", str(tmp_path / "t"),
                   "--partitions", "2", "--substr-dedup", sd,
                   "--substr-ngram", "5", "--substr-max-frac", "0.5",
-                  "--substr-exact"],
+                  "--substr-sample", "1"],
                  spark=spark)
     assert r["substr_dedup"] == {"ngram": 5, "max_frac": 0.5,
                                  "sample_mod": 1, "docs": 5,
@@ -768,20 +757,12 @@ def test_job_substr_dedup_drops_recombinations(spark, tmp_path):
 
 def test_job_substr_dedup_flag_validation(tmp_path):
     base = ["--synth", "4", "--table", str(tmp_path / "t")]
-    for extra in (["--substr-ngram", "5"],
-                  ["--substr-max-frac", "0.2"],
-                  ["--substr-sample", "4"],
-                  ["--substr-exact"],
-                  ["--substr-dedup", str(tmp_path / "sd"),
+    for extra in (["--substr-dedup", str(tmp_path / "sd"),
                    "--substr-ngram", "1"],
                   ["--substr-dedup", str(tmp_path / "sd"),
                    "--substr-max-frac", "1.5"],
                   ["--substr-dedup", str(tmp_path / "sd"),
-                   "--substr-sample", "0"],
-                  ["--substr-dedup", str(tmp_path / "sd"),
-                   "--substr-sample", "4", "--substr-exact"],
-                  ["--substr-dedup", str(tmp_path / "sd"),
-                   "--substr-sample", "8", "--substr-exact"]):
+                   "--substr-sample", "0"]):
         with pytest.raises(SystemExit):
             job.main(base + extra)
 
@@ -849,10 +830,7 @@ def test_job_clf_filter_keeps_quality_docs(spark, tmp_path):
 
 def test_job_clf_filter_flag_validation(tmp_path):
     base = ["--synth", "4", "--table", str(tmp_path / "t")]
-    for extra in (["--clf-pos", "p.parquet"],
-                  ["--clf-neg", "n.parquet"],
-                  ["--clf-threshold", "0.5"],
-                  ["--clf-filter", str(tmp_path / "cf")],
+    for extra in (["--clf-filter", str(tmp_path / "cf")],
                   ["--clf-filter", str(tmp_path / "cf"),
                    "--clf-pos", "p.parquet"]):
         with pytest.raises(SystemExit):
@@ -911,12 +889,6 @@ def test_job_c4_filter_gates_and_rewrites(spark, tmp_path):
     assert signals.count() == 4
     assert signals.filter("has_bad_word").count() == 1
     assert "kept_text" not in signals.columns
-
-
-def test_job_c4_bad_words_requires_c4_filter(tmp_path):
-    with pytest.raises(SystemExit):
-        job._parse(["--synth", "4", "--table", str(tmp_path / "t"),
-                    "--c4-bad-words", "x"])
 
 
 def test_job_lm_score_flags_noise(spark, tmp_path):
@@ -990,9 +962,6 @@ def test_job_token_sample_flag_validation(tmp_path):
     with pytest.raises(SystemExit):
         job._parse(["--synth", "4", "--table", str(tmp_path / "t"),
                     "--token-sample", "d"])
-    with pytest.raises(SystemExit):
-        job._parse(["--synth", "4", "--table", str(tmp_path / "t"),
-                    "--token-budget", "5"])
 
 
 def test_job_curate_funnel(spark, tmp_path):
@@ -1098,14 +1067,11 @@ def test_job_outlinks_persists_link_layer(spark, tmp_path):
 
 
 def test_job_outlinks_flag_validation(tmp_path):
-    """--outlinks without a source and orphaned --host-rank-iters are
-    parse-time usage errors; a source without html fails loudly."""
+    """--outlinks without a source and a zero --host-rank-iters are
+    parse-time usage errors."""
     with pytest.raises(SystemExit):
         job._parse(["--compact", "--table", str(tmp_path / "t"),
                     "--outlinks", str(tmp_path / "ol")])
-    with pytest.raises(SystemExit):
-        job._parse(["--synth", "4", "--table", str(tmp_path / "t"),
-                    "--host-rank-iters", "5"])
     with pytest.raises(SystemExit):
         job._parse(["--synth", "4", "--table", str(tmp_path / "t"),
                     "--outlinks", str(tmp_path / "ol"),
@@ -1321,9 +1287,6 @@ def test_job_mixture_flag_validation(spark, tmp_path):
         job.main(["--synth", "4", "--table", t, "--mixture",
                   str(tmp_path / "m")], spark=spark)
     with pytest.raises(SystemExit):
-        job.main(["--synth", "4", "--table", t,
-                  "--mix-weights", "en=1"], spark=spark)
-    with pytest.raises(SystemExit):
         job.main(["--synth", "4", "--table", t, "--mixture",
                   str(tmp_path / "m"), "--mix-weights", "en=oops",
                   "--mix-budget", "10"], spark=spark)
@@ -1339,3 +1302,148 @@ def test_job_mix_weights_duplicate_group_rejected(spark, tmp_path):
                   "--mixture", str(tmp_path / "m"),
                   "--mix-weights", "en=2,de=1,en=1",
                   "--mix-budget", "10"], spark=spark)
+
+
+# One case per option of job._CONSUMERS: the option alone, with none of
+# the steps that read it, is a usage error.
+ORPHAN_CASES = {
+    "metrics": ["--metrics", "m"],
+    "run_id": ["--run-id", "r"],
+    "partition_by": ["--partition-by", "doc_type"],
+    "partitions": ["--partitions", "2"],
+    "synth_profile": ["--synth-profile", "default"],
+    "neardup_method": ["--neardup-method", "simhash"],
+    "embeddings": ["--embeddings", "e.parquet"],
+    "neardup_max_bucket": ["--neardup-max-bucket", "50"],
+    "gopher_full": ["--gopher-full"],
+    "shard_tokens": ["--shard-tokens", "100"],
+    "lang_keep": ["--lang-keep", "de"],
+    "domain_block": ["--domain-block", "example.com"],
+    "domain_cap": ["--domain-cap", "2"],
+    "robots_txt": ["--robots-txt", "r.parquet"],
+    "robots_agent": ["--robots-agent", "bot"],
+    "token_budget": ["--token-budget", "5"],
+    "sample_salt": ["--sample-salt", "3"],
+    "mix_weights": ["--mix-weights", "en=1"],
+    "mix_budget": ["--mix-budget", "10"],
+    "mix_group": ["--mix-group", "doc_type"],
+    "lm_ref": ["--lm-ref", "ref.parquet"],
+    "lm_buckets": ["--lm-buckets"],
+    "lm_max_bits": ["--lm-max-bits", "5"],
+    "c4_bad_words": ["--c4-bad-words", "x"],
+    "benchmark": ["--benchmark", "x.parquet"],
+    "decontam_ngram": ["--decontam-ngram", "8"],
+    "decontam_min_hits": ["--decontam-min-hits", "2"],
+    "substr_ngram": ["--substr-ngram", "5"],
+    "substr_max_frac": ["--substr-max-frac", "0.2"],
+    "substr_sample": ["--substr-sample", "4"],
+    "clf_pos": ["--clf-pos", "p.parquet"],
+    "clf_neg": ["--clf-neg", "n.parquet"],
+    "clf_threshold": ["--clf-threshold", "0.5"],
+    "curate_repair": ["--curate-repair"],
+    "wet_segments": ["--wet-segments", "5"],
+    "bm25_buckets": ["--bm25-buckets", "8"],
+    "bm25_query": ["--bm25-query", "x"],
+    "bpe_merges": ["--bpe-merges", "5"],
+    "host_rank_iters": ["--host-rank-iters", "5"],
+    "compact_partitions": ["--compact-partitions", "2"],
+}
+
+
+@pytest.mark.parametrize("argv", list(ORPHAN_CASES.values()),
+                         ids=[a[0] for a in ORPHAN_CASES.values()])
+def test_job_orphan_option_is_usage_error(argv, tmp_path, capsys):
+    with pytest.raises(SystemExit):
+        job._parse(["--table", str(tmp_path / "t"), "--expire-keep", "1",
+                    *argv])
+    assert f"error: {argv[0]} only applies with" in capsys.readouterr().err
+
+
+def test_job_stage_table_matches_stage_flags():
+    """Every DIR-valued stage flag is wired into job._STAGES (or is
+    --outlinks, which reads the input instead of the committed table),
+    every stage has a flag, and every option of the consumer table has
+    an orphan case above and names real flags."""
+    actions = {a.dest: a for a in job._parser()._actions}
+    stage_flags = {d for d, a in actions.items() if a.metavar == "DIR"}
+    stages = [dest for dest, _ in job._STAGES]
+    assert len(stages) == len(set(stages))
+    assert set(stages) == stage_flags - {"outlinks"}
+    assert set(ORPHAN_CASES) == set(job._CONSUMERS)
+    for dest, readers in job._CONSUMERS.items():
+        assert dest in actions and set(readers) <= set(actions), dest
+
+
+def test_job_summary_keys_pinned(spark, tmp_path):
+    """The summary's top-level keys, in order, and each nested key set,
+    for the flags of test_job_full_curation_chain and for the benchmark's
+    --input --curate --write-wet run."""
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(synth.generate_rows(16, profile="cc"),
+                          schema=schemas.INPUT_SCHEMA).write.parquet(inp)
+
+    def shape(summary):
+        return [(k, sorted(v) if isinstance(v, dict) else None)
+                for k, v in summary.items()]
+
+    head = [("run_id", None), ("processed", None), ("snapshot", None),
+            ("committed_rows", None)]
+    r = job.main(["--input", inp, "--table", str(tmp_path / "t"),
+                  "--partitions", "2", "--partition-by", "doc_type",
+                  "--neardup", str(tmp_path / "nd"),
+                  "--dedup-apply", str(tmp_path / "da"),
+                  "--quality-filter", str(tmp_path / "qf")], spark=spark)
+    assert shape(r) == head + [
+        ("neardup", ["max_bucket", "max_bucket_size", "method",
+                     "n_buckets", "n_hot_buckets", "pairs",
+                     "rows_dropped"]),
+        ("dedup_apply", ["clusters", "docs", "dropped", "survivors"]),
+        ("quality_filter", ["docs", "dropped", "kept"])]
+
+    r = job.main(["--input", inp, "--table", str(tmp_path / "t2"),
+                  "--curate", str(tmp_path / "cur"),
+                  "--write-wet", str(tmp_path / "wet")], spark=spark)
+    assert shape(r) == head + [
+        ("write_wet", ["bytes", "records", "segments", "skipped"]),
+        ("curate", ["c4", "clean", "exact_dedup", "gopher", "input",
+                    "lang", "neardup", "scrub"])]
+    assert list(r["curate"]) == ["input", "scrub", "clean", "lang",
+                                 "gopher", "c4", "exact_dedup", "neardup"]
+    assert all(sorted(v) == ["in", "out"] for v in r["curate"].values())
+
+
+def _curate_input(spark, tmp_path, texts):
+    rows = [(f"https://cc.synth.local/p{i:02d}/webpage/doc.txt", None,
+             None, t, "en", None) for i, t in enumerate(texts)]
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(rows, schema=schemas.INPUT_SCHEMA)\
+        .write.parquet(inp)
+    return ["--input", inp, "--table", str(tmp_path / "t"),
+            "--partitions", "2", "--curate", str(tmp_path / "curate")]
+
+
+def test_job_curate_reads_benchmark(spark, tmp_path):
+    """--curate --benchmark runs curate's own decontam stage, with no
+    standalone --decontam pass."""
+    from tests.test_curate import good
+
+    bench = str(tmp_path / "bench.parquet")
+    spark.createDataFrame([(good(0).replace("\n", " "),)], ["text"])\
+        .write.parquet(bench)
+    r = job.main(_curate_input(spark, tmp_path, [good(i) for i in range(4)])
+                 + ["--benchmark", bench], spark=spark)
+    assert "decontam" not in r
+    assert r["curate"]["decontam"] == {"in": 4, "out": 3}
+
+
+def test_job_curate_reads_c4_bad_words(spark, tmp_path):
+    """--curate --c4-bad-words drops the page carrying the word at the
+    c4 stage."""
+    from tests.test_curate import good
+
+    texts = [good(i) for i in range(4)]
+    texts[1] += "\nThe zorblax of the city is here."
+    r = job.main(_curate_input(spark, tmp_path, texts)
+                 + ["--c4-bad-words", "zorblax"], spark=spark)
+    assert r["curate"]["gopher"]["out"] == 4
+    assert r["curate"]["c4"] == {"in": 4, "out": 3}
