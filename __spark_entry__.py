@@ -1397,10 +1397,11 @@ ORDER BY l_returnflag, l_linestatus
 
 
 # ---- Hash-seeded ops, oracle-checked via the md5 hash family ----
-# Production runs hash_mode='xxhash64' (JVM intrinsic, covered by
-# pytest); the driver queries run the IDENTICAL algorithm with
-# hash_mode='md5' so DuckDB can replay every stage (shingle hash ->
-# signature -> banding -> bucket join -> verify) in pure SQL.
+# Production runs MinHash with hash_mode='poly' (numpy pandas UDFs)
+# and SimHash with 'xxhash64' (JVM intrinsic), both covered by pytest;
+# the driver queries run the same algorithm with hash_mode='md5' so
+# DuckDB can replay every stage (shingle hash -> signature -> banding
+# -> bucket join -> verify) in pure SQL.
 
 def q_minhash_pairs(spark, sf_dir):
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
@@ -1968,8 +1969,7 @@ SELECT id_a, id_b, hamming FROM p WHERE hamming <= 10 ORDER BY id_a, id_b
 def q_lsh_ann(spark, sf_dir):
     e = _emb(spark, sf_dir)
     out = similarity.lsh_cosine_topk(e.filter(F.col("vec_id") < 5), e,
-                                     k=3, planes=6, tables=4,
-                                     hash_mode="md5")
+                                     k=3, planes=6, tables=4)
     return out.select("query_id", "rank", "corpus_id",
                       F.round("cos_sim", 4).alias("cos_sim"))
 
@@ -5777,7 +5777,7 @@ def oracle_sql() -> dict[str, str]:
         "pricing_summary": _sql_pricing_summary(),
         # md5-hash-family twins of the LSH operators: DuckDB replays
         # every stage (hash -> signature -> banding -> bucket join ->
-        # verify) in SQL. Production paths stay xxhash64 (pytest-covered).
+        # verify) in SQL. Production families are pytest-covered.
         # End-to-end pipeline queries: the Spark side runs the REAL
         # classify->salt->mapInArrow extraction; the oracle replays the
         # parser semantics (P2-P10, P13, T5 quality constants) on the

@@ -522,11 +522,8 @@ def main():
     def _de():
         dedup.exact_dedup(docs).count()
 
-    # poly: numpy rolling-hash signature fast path (~3x vs the
-    # expression form; verify stage stays exact-Jaccard).
     mh_pairs, mh_rep = dedup.minhash_lsh_pairs(
-        docs, threshold=0.3, hash_mode="poly", return_report=True,
-        spread=cpus)
+        docs, threshold=0.3, return_report=True, spread=cpus)
 
     @timed("minhash_lsh")
     def _mh():
@@ -667,8 +664,8 @@ def main():
     def _ann():
         similarity.cosine_topk(emb.filter(F.col("vec_id") < 32), emb, k=10).count()
 
-    # Multi-table LSH on the BLAS signature path (default
-    # hash_mode='md5'). planes=8/tables=8 is the r3 tuned config:
+    # Multi-table LSH on the BLAS signature path. planes=8/tables=8
+    # is the r3 tuned config:
     # measured 0.99 recall@1 on planted cos~0.95 neighbors at ~3%
     # candidate fraction (target >=0.9; see ann_recall_* below).
     ANN_PLANES, ANN_TABLES = 8, 8
@@ -791,10 +788,10 @@ def main():
                        F.col("embedding").cast("array<double>")
                        .alias("cv"))
         qb = similarity._bucket_rows(q, "query_id", "qv", ANN_PLANES,
-                                     ANN_TABLES, "md5", probes=probes)
+                                     ANN_TABLES, probes=probes)
         cb = similarity._cap_buckets(
             similarity._bucket_rows(c, "corpus_id", "cv", ANN_PLANES,
-                                    ANN_TABLES, "md5"),
+                                    ANN_TABLES),
             ["table", "bucket"], 10_000)  # mirror the operator's cap
         n_cand = (qb.join(cb, ["table", "bucket"])
                   .filter(F.col("query_id") != F.col("corpus_id"))

@@ -466,10 +466,13 @@ def _parse(argv):
     if args.dedup_apply and not args.neardup:
         p.error("--dedup-apply requires --neardup (it resolves the "
                 "pairs that stage persists)")
-    if (args.neardup_method in ("embedding", "semantic")
-            and not args.embeddings):
+    embedding_method = args.neardup_method in ("embedding", "semantic")
+    if embedding_method and not args.embeddings:
         p.error(f"--neardup-method {args.neardup_method} requires "
                 "--embeddings (the snapshot carries no vectors)")
+    if args.embeddings and not embedding_method:
+        p.error("--embeddings only applies with --neardup-method "
+                f"embedding or semantic, not {args.neardup_method}")
     if (args.domain_filter and not args.domain_block
             and args.domain_cap is None):
         p.error("--domain-filter needs --domain-block and/or "
@@ -663,7 +666,7 @@ def _neardup(spark, args, committed) -> dict:
 
     generators = {
         "minhash": lambda d: dedup.minhash_lsh_pairs(
-            d, text_col="extracted_text", id_col="url", hash_mode="poly",
+            d, text_col="extracted_text", id_col="url",
             max_bucket=args.neardup_max_bucket, return_report=True),
         "simhash": lambda d: dedup.simhash_pairs(
             d, text_col="extracted_text", id_col="url",

@@ -56,8 +56,8 @@ from pyspark.sql import functions as F
 from . import scrub
 from .dedup import dedup_resolve, minhash_lsh_pairs, normalize_text
 from .textstats import (
-    C4_MIN_SENTENCES,
     c4_kept_lines,
+    c4_page_gate,
     dedup_lines_in_doc,
     repetition_stats,
     with_lang_guess,
@@ -148,25 +148,15 @@ def curate(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             "n_dup_lines_removed", F.lit(None).cast("bigint"))
 
     # -- scalar gates in ONE projection over the cleaned text
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    kept_text = F.array_join(c4_kept_lines(c), "\n")
-    n_sentences = F.regexp_count(F.col("_c4_text"), F.lit("[.!?]"))
-    if c4_bad_words:
-        has_bad = F.arrays_overlap(
-            F.regexp_extract_all(F.lower(c), F.lit("[a-z]+"), 0),
-            F.array(*[F.lit(w.lower()) for w in c4_bad_words]))
-    else:
-        has_bad = F.lit(False)
     scalar = (with_lang_guess(cleaned, text_col).select(
         F.col(id_col), "n_pii_redacted", "n_chars_removed",
-        "n_dup_lines_removed", "lang_guess",
-        kept_text.alias("_c4_text"),
-        (F.lower(c).contains("lorem ipsum") | c.contains("{") | has_bad)
-        .alias("_c4_page_flag"))
-        .withColumn("c4_ok", (n_sentences >= C4_MIN_SENTENCES)
-                    & ~F.col("_c4_page_flag"))
+        "n_dup_lines_removed", "lang_guess", F.col(text_col),
+        F.array_join(c4_kept_lines(F.col(text_col)), "\n")
+        .alias("_c4_text"))
+        .withColumn("c4_ok", c4_page_gate(F.col(text_col), F.col("_c4_text"),
+                                          c4_bad_words)["keep"])
         .withColumn("lang_ok", F.col("lang_guess").isin(*keep_langs))
-        .drop("_c4_page_flag"))
+        .drop(text_col))
 
     # -- Gopher repetition (its bigram aggregation shuffles once) joins in
     rep = repetition_stats(cleaned, text_col=text_col, id_col=id_col)

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_hash64, normalize_text
+from .dedup import check_hash_mode, md5_hash64, normalize_text
 
 
 def word_ngrams(c: Column, n: int = 13) -> Column:
@@ -64,8 +64,14 @@ def ngram_hashes(c: Column, n: int = 13,
     stays xxhash64 (one JVM intrinsic per gram). Same PERF WARNING as
     ``word_ngrams`` — hot paths go through ``_gram_hash_rows``."""
     grams = word_ngrams(c, n)
-    hf = md5_hash64 if hash_mode == "md5" else (lambda g: F.xxhash64(g))
-    return F.array_distinct(F.transform(grams, hf))
+    return F.array_distinct(F.transform(grams, _gram_hash(hash_mode)))
+
+
+def _gram_hash(hash_mode: str):
+    """The n-gram hash of a family: xxhash64 (production) or
+    md5_hash64 (the oracle twin); any other value raises ValueError."""
+    check_hash_mode(hash_mode, ("xxhash64", "md5"))
+    return md5_hash64 if hash_mode == "md5" else (lambda g: F.xxhash64(g))
 
 
 def _gram_hash_rows(df: DataFrame, keep: tuple, text_col: str, n: int,
@@ -88,7 +94,7 @@ def _gram_hash_rows(df: DataFrame, keep: tuple, text_col: str, n: int,
     runs only at anchors, ~sample_mod× less work end to end."""
     toks = F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))),
                    " ")
-    hf = md5_hash64 if hash_mode == "md5" else (lambda g: F.xxhash64(g))
+    hf = _gram_hash(hash_mode)
     cnt = F.size(F.col("_toks"))
     idx = F.sequence(F.lit(1), cnt - F.lit(n - 1))
     if sample_mod > 1:

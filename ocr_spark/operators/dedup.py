@@ -1,9 +1,12 @@
 """Deduplication operators for web-scale corpus curation.
 
-All candidate generation is expression-only (whole-stage codegen):
-shingling via sequence+substring, MinHash via seeded xxhash64, SimHash
-via bit arithmetic — no Python UDFs anywhere. The verify stages are
-exact n-gram Jaccard, also pure expressions.
+Each LSH operator runs one production hash family. MinHash and the
+n-gram anchors hash shingles with a base-257 rolling polynomial in
+vectorized pandas UDFs (one numpy pass per Arrow batch); SimHash hashes
+tokens with xxhash64 and votes with bit arithmetic in expressions.
+MinHash and SimHash also keep an md5 family, which the driver oracle
+replays in DuckDB SQL. Verify stages compute Jaccard over shingle sets
+(string shingles for md5, shingle hashes for the polynomial family).
 
 Scale design: every operator is a bounded-fanout bucket join (LSH bands
 / simhash chunks), never an all-pairs cross join; exact dedup is one
@@ -126,21 +129,10 @@ def _perm_consts(num_perm: int) -> list[tuple[int, int]]:
     return consts
 
 
-def shingle_hashes(shingle_arr):
-    """31-bit hash of every shingle — materialize this ONCE (its own
-    projection) before fanning out to permutations."""
-    return F.transform(
-        shingle_arr,
-        lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF).cast("long")))
-
-
 def md5_hash31(c):
-    """31-bit hash from the first 8 hex chars of md5 — the DuckDB-
-    expressible twin of the xxhash64 shingle hash
-    (('0x' || substr(md5(s),1,8))::bigint & 2147483647 in DuckDB).
-    Used by the oracle-checked hash_mode='md5' operator variants; the
-    production default stays xxhash64 (one JVM intrinsic vs an md5 +
-    hex parse per shingle)."""
+    """31-bit hash from the first 8 hex chars of md5, DuckDB-expressible
+    as (('0x' || substr(md5(s),1,8))::bigint & 2147483647). The shingle
+    hash of MinHash's oracle-checked hash_mode='md5' family."""
     return (F.conv(F.substring(F.md5(c.cast("binary")), 1, 8), 16, 10)
             .cast("long").bitwiseAND(F.lit(0x7FFFFFFF).cast("long")))
 
@@ -163,7 +155,7 @@ def shingle_hashes_md5(shingle_arr):
 
 def minhash_signature_from_hashes(hash_arr, num_perm: int = 32):
     """One-hash MinHash over PRE-HASHED shingles (elements must be longs
-    in [0, 2^31-1] — pass shingle_hashes(...), not raw shingle strings):
+    in [0, 2^31-1] — pass shingle_hashes_md5(...), not raw shingles):
     permutation p is the classic universal hash h -> (h * A_p + B_p)
     mod (2^31 - 1). With 31-bit h and constants the product stays under
     2^62, so the long arithmetic can never overflow (Spark 4 runs ANSI
@@ -176,56 +168,59 @@ def minhash_signature_from_hashes(hash_arr, num_perm: int = 32):
         for a, b in _perm_consts(num_perm)])
 
 
-# Backwards-compat alias for the pre-rename call sites (the name change
-# makes the pre-hashed input domain explicit, mirroring
-# simhash_from_hashes).
-minhash_signature = minhash_signature_from_hashes
+def _norm_series(texts):
+    """The pandas twin of `normalize_text` (NULL -> '', trim, lower,
+    whitespace runs -> one space), shared by every rolling-hash UDF.
+    Blocking signatures and the verify hasher MUST normalize
+    identically or candidate semantics silently diverge from verify
+    semantics — one definition keeps that invariant structural."""
+    return (texts.fillna("").str.strip().str.lower()
+            .str.replace(r"\s+", " ", regex=True))
+
+
+def _poly_shingle_hashes(norm, k: int):
+    """Per normalized text, the sorted distinct 31-bit shingle hashes of
+    the 'poly' family: a base-257 rolling polynomial over the UTF-8
+    BYTE k-grams (wraparound uint64, masked to 31 bits) — as uniform
+    as a string hash for LSH banding, and one numpy matmul per doc. A
+    text shorter than k bytes hashes its zero-padded self (one lone
+    shingle), so NULL and '' share a signature."""
+    import numpy as np
+    powers = np.uint64(257) ** np.arange(k - 1, -1, -1, dtype=np.uint64)
+    for s in norm:
+        b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
+        if len(b) < k:
+            b = np.pad(b, (0, k - len(b)))
+        win = np.lib.stride_tricks.sliding_window_view(b, k)
+        yield np.unique((win.astype(np.uint64) @ powers)
+                        & np.uint64(0x7FFFFFFF))
+
+
+def _poly_minhash(norm, k: int, num_perm: int):
+    """Per normalized text, the num_perm MinHash mins (uint64) of its
+    _poly_shingle_hashes under the _perm_consts affine permutations —
+    the same permutations as minhash_signature_from_hashes."""
+    import numpy as np
+    consts = _perm_consts(num_perm)
+    A = np.array([a for a, _ in consts], dtype=np.uint64)
+    B = np.array([b for _, b in consts], dtype=np.uint64)
+    for h in _poly_shingle_hashes(norm, k):
+        # (n_sh, num_perm): h*A+B < 2^62 fits uint64 exactly.
+        yield ((h[:, None] * A + B) % np.uint64(_MERSENNE31)).min(axis=0)
 
 
 def _minhash_signatures_pandas_udf(k: int, num_perm: int):
-    """Vectorized MinHash signatures: numpy rolling polynomial shingle
-    hashes + the SAME affine permutations as the expression form, one
-    matrix op per document instead of num_perm interpreted
-    higher-order-function passes (Catalyst HOFs don't codegen).
-
-    Hash-family note: shingles are hashed with a base-257 rolling
-    polynomial over UTF-8 BYTES (wraparound uint64, masked to 31 bits)
-    instead of xxhash64 over character substrings — an equally uniform
-    family for LSH banding (collision behavior is what matters; the
-    exact-Jaccard verify stage downstream is hash-independent). The
-    permutation constants are _perm_consts, identical to the
-    expression form.
-    """
+    """Vectorized MinHash signatures of the 'poly' family: one matrix
+    op per document instead of num_perm interpreted higher-order-
+    function passes (Catalyst HOFs don't codegen)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
-
-    consts = _perm_consts(num_perm)
 
     @pandas_udf(ArrayType(LongType()))
     def sig(texts: pd.Series) -> pd.Series:
         import numpy as np
-        norm = (texts.fillna("").str.strip().str.lower()
-                .str.replace(r"\s+", " ", regex=True))
-        A = np.array([a for a, _ in consts], dtype=np.uint64)
-        B = np.array([b for _, b in consts], dtype=np.uint64)
-        M31 = np.uint64(_MERSENNE31)
-        powers = (np.uint64(257) **
-                  np.arange(k - 1, -1, -1, dtype=np.uint64))
-        out = []
-        for s in norm:
-            b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-            if len(b) < k:
-                b = np.pad(b, (0, k - len(b)))  # lone short shingle
-                n_sh = 1
-            else:
-                n_sh = len(b) - k + 1
-            win = np.lib.stride_tricks.sliding_window_view(b, k)[:n_sh]
-            h = (win.astype(np.uint64) @ powers) & np.uint64(0x7FFFFFFF)
-            h = np.unique(h)
-            # (n_sh, num_perm): h*A+B < 2^62 fits uint64 exactly.
-            perms = (h[:, None] * A[None, :] + B[None, :]) % M31
-            out.append(perms.min(axis=0).astype(np.int64))
-        return pd.Series(out)
+        return pd.Series([m.astype(np.int64) for m in
+                          _poly_minhash(_norm_series(texts), k, num_perm)])
 
     return sig
 
@@ -238,74 +233,53 @@ def jaccard(a, b):
 
 
 def _shingle_hashes_pandas_udf(k: int):
-    """Distinct rolling-hash shingle values per document — the
-    vectorized twin of ``shingles_of_norm`` for the 'poly' family.
+    """Distinct 'poly' shingle hashes per document — the vectorized
+    twin of ``shingles_of_norm``, so candidate verification computes
+    Jaccard over int64 arrays JVM-side.
 
     The interpreted expression form (transform(sequence..) + substring
     + array_distinct) measured ~256 ms per 6.6 KB document at the
-    verify stage; this numpy pass is ~0.3 ms with the SAME base-257
-    31-bit rolling polynomial the signature UDF uses, so candidate
-    verification computes Jaccard over int64 arrays JVM-side.
-    Jaccard over hashed shingles differs from string shingles only on
-    31-bit collisions (~n²/2³² expected per doc — a 6.6 KB page
-    carries ~1e-2 expected colliding pairs); the md5 oracle mode keeps
-    exact string shingles so the driver gate is unaffected."""
+    verify stage; this numpy pass is ~0.3 ms. Jaccard over hashed
+    shingles differs from string shingles only on 31-bit collisions
+    (~n²/2³² expected per doc — a 6.6 KB page carries ~1e-2 expected
+    colliding pairs); the md5 oracle mode keeps exact string shingles
+    so the driver gate is unaffected."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
     @pandas_udf(ArrayType(LongType()))
     def sh(texts: pd.Series) -> pd.Series:
         import numpy as np
-        norm = (texts.fillna("").str.strip().str.lower()
-                .str.replace(r"\s+", " ", regex=True))
-        powers = (np.uint64(257) **
-                  np.arange(k - 1, -1, -1, dtype=np.uint64))
-        out = []
-        for s in norm:
-            b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-            if len(b) < k:
-                b = np.pad(b, (0, k - len(b)))
-                n_sh = 1
-            else:
-                n_sh = len(b) - k + 1
-            win = np.lib.stride_tricks.sliding_window_view(b, k)[:n_sh]
-            h = (win.astype(np.uint64) @ powers) & np.uint64(0x7FFFFFFF)
-            out.append(np.unique(h).astype(np.int64))
-        return pd.Series(out)
+        return pd.Series([h.astype(np.int64) for h in
+                          _poly_shingle_hashes(_norm_series(texts), k)])
 
     return sh
 
 
-def _spread(df: DataFrame, spread) -> DataFrame:
+def _spread(df: DataFrame, spread: int) -> DataFrame:
     """Small scans (one parquet file -> one task) would serialize the
-    compute-heavy signature stages on a single core; ``spread`` lets a
-    caller widen them. Semantics (r4 hygiene: the production default
-    must not touch df.rdd):
+    compute-heavy signature stages on a single core; ``spread=N``
+    repartitions to N (the caller states the target parallelism:
+    bench/driver queries over one-file scans). The default 0 leaves
+    the input layout alone: production pipelines over many-file tables
+    are already wide, and an operator must not probe or reshuffle
+    behind their back."""
+    return df.repartition(int(spread)) if spread else df
 
-      * ``False``/``None`` (DEFAULT) — leave the input layout alone.
-        Production pipelines over many-file tables are already wide;
-        an operator must not probe or reshuffle behind their back.
-      * ``int N`` — ``repartition(N)`` unconditionally: the caller
-        states the target parallelism (bench/driver queries over
-        one-file scans).
-      * ``True`` — legacy convenience: probe the current partition
-        count (df.rdd.getNumPartitions(), driver-side plan work only)
-        and widen to defaultParallelism when narrower. Kept for tests;
-        not used by any production path."""
-    if not spread:
-        return df
-    if spread is True:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            return df.repartition(target)
-        return df
-    return df.repartition(int(spread))
+
+def check_hash_mode(hash_mode: str, accepted: tuple[str, ...]) -> None:
+    """Reject an unknown hash family instead of falling through to
+    another one (a caller passing a removed family must not silently
+    get different buckets)."""
+    if hash_mode not in accepted:
+        raise ValueError(f"hash_mode must be one of {accepted}, "
+                         f"got {hash_mode!r}")
 
 
 def minhash_band_rows(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 8,
                       num_perm: int = 32, bands: int = 8,
-                      hash_mode: str = "xxhash64") -> DataFrame:
+                      hash_mode: str = "poly") -> DataFrame:
     """The LSH bucket keys alone: (id, band, band_hash) — one row per
     (document, band). This is minhash_lsh_pairs' candidate-generation
     half, exposed so incremental consumers (streaming dedup-on-ingest)
@@ -315,15 +289,18 @@ def minhash_band_rows(df: DataFrame, text_col: str = "text",
     Band rows carry ONLY (id, band, band_hash): at 10^12 docs the
     bands-x duplication of shingle arrays through the shuffle would
     dominate the job; ids shuffle in bytes, shingles re-derive later
-    for the (small) candidate set."""
+    for the (small) candidate set.
+
+    hash_mode is 'poly' (production) or 'md5' (the oracle twin), as in
+    minhash_lsh_pairs. Either way a band hashes to the first 8 hex
+    chars of the md5 of its comma-joined mins."""
+    check_hash_mode(hash_mode, ("poly", "md5"))
     rows_per_band = num_perm // bands
     if hash_mode == "poly":
         sig_udf = _minhash_signatures_pandas_udf(k, num_perm)
         sig = df.select(F.col(id_col).alias("id"),
                         sig_udf(F.col(text_col)).alias("mh"))
     else:
-        hash_shingles = (shingle_hashes if hash_mode == "xxhash64"
-                         else shingle_hashes_md5)
         # Each stage lands in its own projection: _norm so the
         # normalize regex runs once per DOC (inlined into the shingle
         # lambda it re-runs once per SHINGLE — the O(len^2) curate
@@ -335,7 +312,7 @@ def minhash_band_rows(df: DataFrame, text_col: str = "text",
             df.select(F.col(id_col).alias("id"),
                       normalize_text(F.col(text_col)).alias("_norm"))
             .select("id", shingles_of_norm(F.col("_norm"), k).alias("sh"))
-            .withColumn("hs", hash_shingles(F.col("sh")))
+            .withColumn("hs", shingle_hashes_md5(F.col("sh")))
             .withColumn("mh",
                         minhash_signature_from_hashes(F.col("hs"), num_perm))
         )
@@ -343,9 +320,8 @@ def minhash_band_rows(df: DataFrame, text_col: str = "text",
     def band_hash(b):
         joined = F.concat_ws(
             ",", F.slice(F.col("mh"), b * rows_per_band + 1, rows_per_band))
-        return (F.xxhash64(joined) if hash_mode == "xxhash64"
-                else F.conv(F.substring(F.md5(joined.cast("binary")), 1, 8),
-                            16, 10).cast("long"))
+        return F.conv(F.substring(F.md5(joined.cast("binary")), 1, 8),
+                      16, 10).cast("long")
 
     return sig.select(
         "id",
@@ -359,8 +335,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 8,
                       num_perm: int = 32, bands: int = 8,
                       threshold: float = 0.7, max_bucket: int = 1000,
-                      spread: int | bool = False,
-                      hash_mode: str = "xxhash64",
+                      spread: int = 0, hash_mode: str = "poly",
                       return_report: bool = False):
     """MinHash + LSH near-dup pairs: shingle -> minhash -> band buckets ->
     hot-bucket cap -> bucket self-join -> exact-Jaccard verify.
@@ -373,15 +348,16 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     what it capped).
 
     hash_mode selects the shingle-hash family for candidate generation
-    and for the Jaccard verify: 'md5' and 'xxhash64' verify over exact
-    string shingles, while 'poly' verifies over the same 31-bit shingle
-    hashes its signatures use, an estimate that differs only on hash
-    collisions (~n²/2³² per doc, see _shingle_hashes_pandas_udf):
-      'poly'     — numpy rolling-hash pandas UDF, one matmul per doc
-                   (fastest; recommended at scale)
-      'xxhash64' — pure-expression JVM form (no python workers needed)
-      'md5'      — DuckDB-expressible; the driver oracle replays the
-                   identical algorithm in SQL against this mode
+    and for the Jaccard verify; any other value raises ValueError:
+      'poly' (default) — numpy rolling-hash pandas UDFs, one matmul per
+                  doc. The verify runs over the same 31-bit shingle
+                  hashes the signatures use, which differs from string
+                  shingles only on hash collisions (~n²/2³² per doc, see
+                  _shingle_hashes_pandas_udf). NULL text normalizes to
+                  '', so NULL and empty texts pair with jaccard 1.0.
+      'md5'     — DuckDB-expressible expressions over exact string
+                  shingles; the driver oracle replays the identical
+                  algorithm in SQL against this mode.
     """
     df = _spread(df, spread)
     banded = minhash_band_rows(df, text_col=text_col, id_col=id_col, k=k,
@@ -563,17 +539,18 @@ def simhash(c, bits: int = 64):
 
 def simhash_pairs(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", max_hamming: int = 3,
-                  max_bucket: int = 1000, spread: int | bool = False,
+                  max_bucket: int = 1000, spread: int = 0,
                   hash_mode: str = "xxhash64",
                   return_report: bool = False):
     """SimHash near-dup pairs: 64-bit fingerprint, candidate buckets by
     16-bit chunk (pigeonhole: hamming<=3 pairs share >=1 of 4 chunks),
     hot-bucket cap, verified with bit_count(xor).
 
-    hash_mode: 'xxhash64' (production) or 'md5' (DuckDB-oracle twin).
-    return_report=True returns (pairs, report) with the cap_buckets
-    drop counters.
+    hash_mode: 'xxhash64' (production) or 'md5' (DuckDB-oracle twin);
+    any other value raises ValueError. return_report=True returns
+    (pairs, report) with the cap_buckets drop counters.
     """
+    check_hash_mode(hash_mode, ("xxhash64", "md5"))
     hash_tokens = token_hashes if hash_mode == "xxhash64" else token_hashes_md5
     fp = (_spread(df, spread)
           .select(F.col(id_col).alias("id"),
@@ -604,29 +581,18 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     return pairs
 
 
-def _norm_series(texts):
-    """The ngram family's shared text normalization (NULL -> '', trim,
-    lower, whitespace runs -> one space), the pandas twin of
-    `normalize_text`. Blocking signatures and the verify hasher MUST
-    normalize identically or candidate semantics silently diverge from
-    verify semantics — one definition keeps that invariant structural."""
-    return (texts.fillna("").str.strip().str.lower()
-            .str.replace(r"\s+", " ", regex=True))
-
-
 def _ngram_anchor_pandas_udf(k: int, anchor_perms: int, anchor_rows: int,
                              length_band: int):
-    """Vectorized (band, anchors) signatures: numpy rolling polynomial
-    shingle hashes (the _minhash_signatures_pandas_udf family) + affine
-    permutation mins, anchor_rows mins packed per anchor. One matrix op
-    per doc instead of interpreted higher-order-function passes —
-    measured 30s -> sub-second on the sf0.1 bench corpus (Catalyst HOFs
-    don't codegen, and CollapseProject nests the normalize regex inside
-    the per-element lambdas)."""
+    """Vectorized (band, anchors) signatures: the 'poly' MinHash mins
+    (_poly_minhash), anchor_rows mins packed per anchor as
+    (((m0<<31)^m1)...). One matrix op per doc instead of interpreted
+    higher-order-function passes — measured 30s -> sub-second on the
+    sf0.1 bench corpus (Catalyst HOFs don't codegen, and
+    CollapseProject nests the normalize regex inside the per-element
+    lambdas)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    consts = _perm_consts(anchor_perms * anchor_rows)
     out_type = StructType([StructField("band", LongType()),
                            StructField("an", ArrayType(LongType()))])
 
@@ -634,30 +600,15 @@ def _ngram_anchor_pandas_udf(k: int, anchor_perms: int, anchor_rows: int,
     def sig(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
         norm = _norm_series(texts)
-        A = np.array([a for a, _ in consts], dtype=np.uint64)
-        B = np.array([b for _, b in consts], dtype=np.uint64)
-        M31 = np.uint64(_MERSENNE31)
-        powers = (np.uint64(257) **
-                  np.arange(k - 1, -1, -1, dtype=np.uint64))
-        bands, anchors = [], []
-        for s in norm:
-            b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-            bands.append(len(s) // length_band)
-            if len(b) < k:
-                b = np.pad(b, (0, k - len(b)))  # lone short shingle
-                n_sh = 1
-            else:
-                n_sh = len(b) - k + 1
-            win = np.lib.stride_tricks.sliding_window_view(b, k)[:n_sh]
-            h = (win.astype(np.uint64) @ powers) & np.uint64(0x7FFFFFFF)
-            h = np.unique(h)
-            mins = ((h[:, None] * A + B) % M31).min(axis=0)  # (perms*rows,)
+        anchors = []
+        for mins in _poly_minhash(norm, k, anchor_perms * anchor_rows):
             packed = mins.reshape(anchor_perms, anchor_rows)
             a = packed[:, 0].copy()
             for r in range(1, anchor_rows):
                 a = (a << np.uint64(31)) ^ packed[:, r]
             anchors.append(a.astype(np.int64))
-        return pd.DataFrame({"band": bands, "an": anchors})
+        return pd.DataFrame({"band": norm.str.len() // length_band,
+                             "an": anchors})
 
     return sig
 
@@ -756,8 +707,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         length_band: int = 32, max_bucket: int = 10_000,
                         anchor_perms: int | None = None,
                         anchor_rows: int = 2,
-                        spread: int | bool = False, hash_mode: str = "poly",
-                        return_report: bool = False):
+                        spread: int = 0, return_report: bool = False):
     """Exact n-gram Jaccard pairs with (length band, anchor) blocking.
 
     Blocking key = the length band (docs whose normalized lengths differ
@@ -780,11 +730,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     for cost. Exact duplicates always collide; a planted-pairs
     recall-floor test pins the default configuration.
 
-    hash_mode: 'poly' (default) computes signatures in one numpy pass
-    per Arrow batch; 'xxhash64' is the pure-expression JVM form (no
-    python workers) — same algorithm, different (equally uniform)
-    shingle-hash family; candidate sets differ only through hash
-    randomness and the verify stage is hash-independent.
+    Anchors are 'poly' MinHash mins (one numpy pass per Arrow batch);
+    the verify stage is hash-independent.
 
     Scale shape: blocking rows carry ONLY (id, band, perm, anchor) —
     shingle arrays never ride the blocking shuffle; within-bucket pairs
@@ -801,41 +748,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         anchor_perms = derive_anchor_perms(threshold, anchor_rows)
     base = _spread(df, spread).select(F.col(id_col).alias("id"),
                                       F.col(text_col).alias("txt"))
-    if hash_mode == "poly":
-        sig_udf = _ngram_anchor_pandas_udf(k, anchor_perms, anchor_rows,
-                                           length_band)
-        sigs = base.select("id", sig_udf(F.col("txt")).alias("s"))\
-            .select("id", F.col("s.band").alias("band"),
-                    F.col("s.an").alias("an"))
-    else:
-        consts = _perm_consts(anchor_perms * anchor_rows)
-
-        def _affine_min(a, b):
-            return F.array_min(F.transform(
-                F.col("hs"),
-                lambda h: F.pmod(h * F.lit(a) + F.lit(b),
-                                 F.lit(_MERSENNE31))))
-
-        mins = F.array(*[_affine_min(a, b) for a, b in consts])
-        anchors = F.array(*[
-            _fold_anchor([F.element_at(F.col("mins"), p * anchor_rows + r + 1)
-                          for r in range(anchor_rows)])
-            for p in range(anchor_perms)])
-        # norm is its own projection, referenced twice (band + shingle
-        # lambda) so CollapseProject keeps it — inlining it nests the
-        # whitespace regex inside the per-element substring lambda
-        # (measured 6x the whole stage cost).
-        n = F.length("norm")
-        idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-        sh_of_norm = F.array_distinct(
-            F.transform(idx, lambda j: F.substring(F.col("norm"), j, k)))
-        sigs = (
-            base.select("id", normalize_text(F.col("txt")).alias("norm"))
-            .select("id", F.floor(n / length_band).alias("band"),
-                    sh_of_norm.alias("sh"))
-            .withColumn("hs", shingle_hashes(F.col("sh")))
-            .withColumn("mins", mins)
-            .select("id", "band", anchors.alias("an")))
+    sig_udf = _ngram_anchor_pandas_udf(k, anchor_perms, anchor_rows,
+                                       length_band)
+    sigs = base.select("id", sig_udf(F.col("txt")).alias("s"))\
+        .select("id", F.col("s.band").alias("band"),
+                F.col("s.an").alias("an"))
     keyed = (
         sigs.select("id", "an",
                     F.explode(F.array(F.col("band"),
@@ -918,14 +835,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     if return_report:
         return pairs, bucket_report(keyed, ["b", "perm", "anchor"], max_bucket)
     return pairs
-
-
-def _fold_anchor(cols):
-    """Pack anchor_rows 31-bit mins into one long: (((m0<<31)^m1)...)."""
-    acc = cols[0]
-    for c in cols[1:]:
-        acc = F.shiftleft(acc, 31).bitwiseXOR(c)
-    return acc
 
 
 # ---------------------------------------------------------------------------

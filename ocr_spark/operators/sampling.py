@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import check_hash_mode
 from .textstats import token_count
 
 N_BUCKETS_BITS = 12  # 4096 buckets: driver prefix is trivial,
@@ -40,6 +41,7 @@ N_BUCKETS_BITS = 12  # 4096 buckets: driver prefix is trivial,
 
 
 def _rank_key(id_col: str, salt: int, hash_mode: str):
+    check_hash_mode(hash_mode, ("xxhash64", "md5"))
     sid = F.concat(F.col(id_col).cast("string"), F.lit(f"#{salt}"))
     if hash_mode == "md5":
         # Hex string — ASCII ordering, identical in DuckDB.

@@ -149,23 +149,17 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
             .filter(F.col("rank") <= k))
 
 
-def lsh_sign_bucket(vec, planes: int = 12, table: int = 0,
-                    hash_mode: str = "xxhash64"):
+def lsh_sign_bucket(vec, planes: int = 12, table: int = 0):
     """Deterministic random-hyperplane signature packed into a BIGINT.
 
-    Plane weights derive from hash(table, plane, dim_index) mapped to
-    [-0.5, 0.5] — no RNG state, identical on every executor and run.
-    ``table`` seeds independent hash tables for multi-table LSH.
-    hash_mode 'md5' derives weights from md5 hex (DuckDB-expressible,
-    used by the driver oracle); production default is xxhash64.
+    Plane weights derive from md5('{table},{plane},{dim_index}') mapped
+    to [-0.5, 0.5] (_md5_weight_matrix) — no RNG state, identical on
+    every executor and run, and DuckDB-expressible for the driver
+    oracle. ``table`` seeds independent hash tables for multi-table
+    LSH. This Catalyst form is the reference the BLAS path
+    (_lsh_buckets_pandas_udf) is tested against.
     """
     def _weights(plane: int):
-        if hash_mode == "xxhash64":
-            return F.transform(
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda d: (F.pmod(F.xxhash64(F.lit(table), F.lit(plane), d),
-                                  F.lit(1000))
-                           .cast("double") / 1000.0 - 0.5))
         return F.transform(
             F.sequence(F.lit(0), F.size(vec) - 1),
             lambda d: (F.pmod(
@@ -185,28 +179,15 @@ def lsh_sign_bucket(vec, planes: int = 12, table: int = 0,
     return sig
 
 
-def _lsh_tables(vec, planes: int, tables: int, hash_mode: str = "xxhash64",
-                probes: int = 0):
+def _lsh_tables(vec, planes: int, tables: int):
     """ARRAY<STRUCT<table,bucket>>: one sign signature per hash table.
     Multi-table LSH: a pair is a candidate if it collides in ANY table —
     recall no longer depends on a single lucky signature (the
-    single-table exact-match form has uncontrolled recall at scale).
-
-    probes > 0 additionally emits 1-bit-flipped neighbor buckets
-    (multi-probe LSH, Lv et al. VLDB 2007) — in this expression form
-    the flipped bits are positions 0..probes-1 (the BLAS path flips the
-    lowest-|projection| bits instead; candidate sets differ only
-    through probe choice, and scoring stays exact either way)."""
-    entries = []
-    for t in range(tables):
-        sig = lsh_sign_bucket(vec, planes, table=t, hash_mode=hash_mode)
-        entries.append(F.struct(F.lit(t).alias("table"),
-                                sig.alias("bucket")))
-        for j in range(probes):
-            entries.append(F.struct(
-                F.lit(t).alias("table"),
-                sig.bitwiseXOR(F.lit(1 << j).cast("long")).alias("bucket")))
-    return F.array(*entries)
+    single-table exact-match form has uncontrolled recall at scale)."""
+    return F.array(*[
+        F.struct(F.lit(t).alias("table"),
+                 lsh_sign_bucket(vec, planes, table=t).alias("bucket"))
+        for t in range(tables)])
 
 
 def _cap_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
@@ -216,7 +197,7 @@ def _cap_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
 
 def _md5_weight_matrix(dim: int, planes: int, tables: int):
     """The md5 hash-family plane weights as a numpy (dim, tables*planes)
-    matrix — identical values to lsh_sign_bucket(hash_mode='md5'):
+    matrix — identical values to lsh_sign_bucket:
     w(t,p,d) = (int(md5('{t},{p},{d}')[:8hex], 16) % 1000)/1000 - 0.5."""
     import hashlib
 
@@ -236,7 +217,7 @@ def _lsh_buckets_pandas_udf(planes: int, tables: int, probes: int = 0):
     instead of tables x planes interpreted higher-order-function passes
     per row (Catalyst HOFs don't codegen — measured ~10x on the bench).
     Returns ARRAY<LONG> of per-table buckets; bucket t at index t.
-    Bit-exact with the expression md5 form (pytest asserts it).
+    Bit-exact with the lsh_sign_bucket expression (pytest asserts it).
 
     Equivalence caveat: `mat @ W` sums in BLAS order while the
     expression form (and DuckDB's list_sum) sums sequentially, so the
@@ -283,34 +264,25 @@ def _lsh_buckets_pandas_udf(planes: int, tables: int, probes: int = 0):
 
 
 def _bucket_rows(base: DataFrame, id_col: str, vec_col: str,
-                 planes: int, tables: int, hash_mode: str,
-                 probes: int = 0) -> DataFrame:
+                 planes: int, tables: int, probes: int = 0) -> DataFrame:
     """(id, table, bucket) rows for multi-table LSH; with probes > 0
     each row additionally probes that many 1-bit-flipped neighbor
     buckets per table (query-side multi-probe).
 
-    hash_mode='md5' runs the numpy-matmul pandas UDF (fast path; the
-    md5 weight matrix is precomputed once per worker, so signatures
-    cost one BLAS matmul per batch). hash_mode='xxhash64' keeps the
-    expression form (JVM-side weights, no python).
+    Signatures come from the numpy-matmul pandas UDF: the md5 weight
+    matrix is precomputed once per worker, so they cost one BLAS matmul
+    per batch.
 
     probes clamps to [0, planes]: there are only `planes` distinct
-    1-bit flips (beyond that the BLAS argsort would fault and the
-    expression form would emit never-matching buckets)."""
+    1-bit flips (beyond that the BLAS argsort would fault)."""
     probes = max(0, min(probes, planes))
-    if hash_mode == "md5":
-        udf = _lsh_buckets_pandas_udf(planes, tables, probes)
-        step = 1 + probes
-        ex = base.select(
-            id_col, F.posexplode(udf(F.col(vec_col))).alias("pos", "bucket"))
-        return ex.select(id_col,
-                         F.floor(F.col("pos") / step).cast("int")
-                         .alias("table"), "bucket")
-    return base.select(
-        id_col,
-        F.explode(_lsh_tables(F.col(vec_col), planes, tables,
-                              hash_mode, probes)).alias("tb"),
-    ).select(id_col, "tb.table", "tb.bucket")
+    udf = _lsh_buckets_pandas_udf(planes, tables, probes)
+    step = 1 + probes
+    ex = base.select(
+        id_col, F.posexplode(udf(F.col(vec_col))).alias("pos", "bucket"))
+    return ex.select(id_col,
+                     F.floor(F.col("pos") / step).cast("int")
+                     .alias("table"), "bucket")
 
 
 def lsh_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -318,7 +290,6 @@ def lsh_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
                     query_id: str = "vec_id", corpus_id: str = "vec_id",
                     vec_col: str = "embedding",
                     max_bucket: int = 10_000,
-                    hash_mode: str = "md5",
                     probes: int = 0,
                     return_report: bool = False):
     """ANN: multi-table sign-LSH candidate generation, then exact cosine
@@ -350,9 +321,9 @@ def lsh_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     bound; overlaps dedup). bench.py measures the natural-corpus
     recall@10 gain at a stated candidate fraction per run.
 
-    hash_mode 'md5' (default) computes signatures with the BLAS matmul
-    fast path (~4x at sf0.1; also the DuckDB-oracle family);
-    'xxhash64' keeps the pure-expression JVM form.
+    Signatures use the md5 hyperplane family through the BLAS matmul
+    path (~4x the expression form at sf0.1); the driver oracle replays
+    the same family in SQL.
     """
     q = queries.select(
         F.col(query_id).alias("query_id"),
@@ -362,8 +333,8 @@ def lsh_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
         F.col(vec_col).cast("array<double>").alias("cv"))
 
     q_buckets = _bucket_rows(q, "query_id", "qv", planes, tables,
-                             hash_mode, probes=probes)
-    c_buckets = _bucket_rows(c, "corpus_id", "cv", planes, tables, hash_mode)
+                             probes=probes)
+    c_buckets = _bucket_rows(c, "corpus_id", "cv", planes, tables)
     c_uncapped = c_buckets
     c_buckets = _cap_buckets(c_buckets, ["table", "bucket"], max_bucket)
 
@@ -394,18 +365,16 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              max_bucket: int = 1000,
-                             hash_mode: str = "md5",
                              return_report: bool = False):
     """Embedding-cosine near-duplicate pairs via multi-table LSH
     self-join: ids-only bucket shuffle, hot-bucket cap, candidate pairs
     deduped across tables, vectors re-joined once for exact scoring.
-    hash_mode as in lsh_cosine_topk ('md5' = BLAS fast path).
-    return_report=True returns (pairs, report) with the cap_buckets
-    drop counters."""
+    Signatures as in lsh_cosine_topk. return_report=True returns
+    (pairs, report) with the cap_buckets drop counters."""
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"))
-    buckets = _bucket_rows(base, "id", "v", planes, tables, hash_mode)
+    buckets = _bucket_rows(base, "id", "v", planes, tables)
     uncapped = buckets
     buckets = _cap_buckets(buckets, ["table", "bucket"], max_bucket)
 

@@ -757,39 +757,49 @@ def c4_kept_lines(c: Column) -> Column:
         & ~F.lower(line).contains("javascript"))
 
 
-def c4_stats(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id",
-             bad_words: tuple[str, ...] = C4_BAD_WORDS) -> DataFrame:
-    """Per-document C4 signals + the keep decision + the retained
-    text. Sentences are counted as terminal marks ([.!?]) in the
-    retained lines; the bad-word gate matches lowercase alpha runs
-    against ``bad_words``. One codegen projection, no shuffle."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    kept = c4_kept_lines(c)
-    kept_text = F.array_join(kept, "\n")
-    n_sentences = _char_count(kept_text, ".!?")
-    has_lorem = F.lower(c).contains("lorem ipsum")
-    has_brace = c.contains("{")
+def c4_page_gate(c: Column, kept_text: Column,
+                 bad_words: tuple[str, ...] = C4_BAD_WORDS
+                 ) -> dict[str, Column]:
+    """C4's page-level rules for page text ``c`` whose retained lines
+    (c4_kept_lines, joined by newlines) are ``kept_text``: the signals
+    n_sentences (terminal marks [.!?] in the retained text), has_lorem,
+    has_brace and has_bad_word (lowercase alpha runs of the page
+    against ``bad_words``), and ``keep``, the page decision over them.
+    Pass ``kept_text`` as a landed column when it is selected too, so
+    the line rules run once per page."""
+    c = F.coalesce(c, F.lit(""))
     if bad_words:
         words = F.regexp_extract_all(F.lower(c), F.lit("[a-z]+"), 0)
         has_bad = F.arrays_overlap(
             words, F.array(*[F.lit(w.lower()) for w in bad_words]))
     else:
         has_bad = F.lit(False)
-    out = df.select(
+    gate = {"n_sentences": _char_count(kept_text, ".!?"),
+            "has_lorem": F.lower(c).contains("lorem ipsum"),
+            "has_brace": c.contains("{"),
+            "has_bad_word": has_bad}
+    gate["keep"] = ((gate["n_sentences"] >= C4_MIN_SENTENCES)
+                    & ~gate["has_lorem"] & ~gate["has_brace"]
+                    & ~gate["has_bad_word"])
+    return gate
+
+
+def c4_stats(df: DataFrame, text_col: str = "text",
+             id_col: str = "doc_id",
+             bad_words: tuple[str, ...] = C4_BAD_WORDS) -> DataFrame:
+    """Per-document C4 signals + the keep decision (c4_page_gate) +
+    the retained text. One codegen projection, no shuffle."""
+    c = F.coalesce(F.col(text_col), F.lit(""))
+    kept = c4_kept_lines(c)
+    kept_text = F.array_join(kept, "\n")
+    gate = c4_page_gate(c, kept_text, bad_words)
+    return df.select(
         F.col(id_col),
         F.size(F.split(c, "\n")).alias("n_lines"),
         F.size(kept).alias("n_kept_lines"),
-        n_sentences.alias("n_sentences"),
-        has_lorem.alias("has_lorem"),
-        has_brace.alias("has_brace"),
-        has_bad.alias("has_bad_word"),
-        kept_text.alias("kept_text"))
-    return out.withColumn(
-        "keep",
-        (F.col("n_sentences") >= C4_MIN_SENTENCES)
-        & ~F.col("has_lorem") & ~F.col("has_brace")
-        & ~F.col("has_bad_word"))
+        *[gate[k].alias(k) for k in ("n_sentences", "has_lorem",
+                                     "has_brace", "has_bad_word")],
+        kept_text.alias("kept_text"), gate["keep"].alias("keep"))
 
 
 def c4_filter(df: DataFrame, text_col: str = "text",

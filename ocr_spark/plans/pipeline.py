@@ -67,6 +67,13 @@ def salt_partitions(df: DataFrame, num_partitions: int) -> DataFrame:
     (relative partition-size stddev ~ 1/sqrt(256) = 6%).
     Giant blobs salt per-url so a burst of multi-MB documents spreads
     individually instead of clumping.
+
+    Each partition is then sorted by url (ties broken on the other
+    columns, in column order): rows reach a shuffle reader in whatever
+    order the map outputs arrive, and the extractor numbers
+    ``row_in_partition`` in arrival order, so without the sort the same
+    input could commit different lineage values. The sort runs inside
+    the partition and adds no exchange.
     """
     salt = (
         F.when(F.length("html") >= GIANT_BLOB_THRESHOLD,
@@ -74,7 +81,10 @@ def salt_partitions(df: DataFrame, num_partitions: int) -> DataFrame:
         .otherwise(F.pmod(F.xxhash64("url"),
                           F.lit(num_partitions * 256)).cast("string"))
     )
-    return df.withColumn("_salt", salt).repartition(num_partitions, "_salt").drop("_salt")
+    order = ["url"] + [c for c in df.columns if c != "url"]
+    return (df.withColumn("_salt", salt)
+            .repartition(num_partitions, "_salt")
+            .sortWithinPartitions(*order).drop("_salt"))
 
 
 def run_extraction(spark: SparkSession, input_df: DataFrame,

@@ -296,10 +296,16 @@ def stream_neardup(spark: SparkSession, input_dir: str, table_root: str,
     sidecar join too (a boilerplate bucket with a million committed
     members must not fan a new doc into a million verify pairs).
 
-    NULL-text semantics are batch parity: a NULL text shingles to the
-    degenerate [NULL] array, so all NULL-text docs are mutual near-dups
-    (jaccard 1.0) — the first one committed wins, within a batch and
-    across batches, exactly as minhash_lsh_pairs pairs them in batch.
+    Band keys use minhash_lsh_pairs' default 'poly' family, so the
+    sidecar holds poly-signature keys (a sidecar written by an
+    earlier, xxhash64-keyed version never matches them).
+
+    NULL-text semantics: within a batch the poly family normalizes
+    NULL to '', so NULL and empty texts are mutual near-dups (jaccard
+    1.0). Across batches the verify shingles strings, where a NULL
+    text is the degenerate [NULL] array: NULL pairs with NULL and ''
+    with '', but NULL never with ''. Either way the first one
+    committed wins.
 
     Metrics land per batch under ``<table_root>/metrics_neardup``:
     input_rows, redelivered (url-committed or url-dup-in-batch),

@@ -166,6 +166,28 @@ def test_giant_blob_isolated(extracted):
         assert collected[u]["error"] is None or "panic" not in collected[u]["error"]
 
 
+def test_lineage_independent_of_input_order(spark):
+    """row_in_partition numbers rows in the order the extractor sees
+    them; the same rows in another order and partitioning must commit
+    the same (url, partition_id, row_in_partition), duplicate urls
+    included."""
+    from ocr_spark import schemas
+    rows = synth.generate_rows(60)
+    rows += [dict(rows[0], text="a second body"),
+             dict(rows[1], text=None)]
+
+    def lineage(df):
+        out = pipeline.run_extraction(spark, df, run_id="r",
+                                      num_partitions=4)
+        return sorted((r["url"], r["partition_id"], r["row_in_partition"],
+                       r["extracted_text"]) for r in out.collect())
+
+    forward = spark.createDataFrame(rows, schema=schemas.INPUT_SCHEMA)
+    backward = spark.createDataFrame(rows[::-1], schema=schemas.INPUT_SCHEMA)
+    assert (lineage(forward.coalesce(1))
+            == lineage(backward.repartition(3)))
+
+
 def test_metrics_table(spark, extracted):
     rows, _ = extracted
     df = spark.createDataFrame(rows, schema=__import__("ocr_spark.schemas", fromlist=["x"]).INPUT_SCHEMA)

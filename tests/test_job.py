@@ -474,7 +474,7 @@ def test_job_neardup_embedding_method(spark, tmp_path):
     """--neardup-method embedding joins a (url, embedding) sidecar
     table to the committed urls and feeds cosine near-dup pairs into
     the same resolve/apply tail; omitting --embeddings is a usage
-    error."""
+    error, and so is --embeddings with a method that reads no vectors."""
     import pytest
 
     urls = [f"https://cc.synth.local/app{i}/salary_slip/{i}.png"
@@ -511,6 +511,10 @@ def test_job_neardup_embedding_method(spark, tmp_path):
     with pytest.raises(SystemExit):
         job._parse(["--synth", "4", "--table", str(tmp_path / "t2"),
                     "--neardup", nd, "--neardup-method", "embedding"])
+    for method in ([], ["--neardup-method", "ngram"]):
+        with pytest.raises(SystemExit):
+            job._parse(["--synth", "4", "--table", str(tmp_path / "t2"),
+                        "--neardup", nd, *method, "--embeddings", emb])
 
 
 def test_job_neardup_semantic_method(spark, tmp_path):

@@ -242,6 +242,26 @@ class TestRoundTrips:
         ref = jc.ycbcr_to_rgb(ycc)
         assert np.abs(out.astype(int) - ref.astype(int)).max() <= 3
 
+    def test_noninterleaved_first_scan_rejected(self):
+        """A baseline frame of 3 components whose first scan carries
+        only one (a multi-scan, non-interleaved file) is rejected, not
+        decoded from that scan alone."""
+        rng = np.random.default_rng(9)
+        img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+        data = jc.encode_jpeg_baseline(img)
+        sos = data.index(b"\xff\xda")
+        ls = int.from_bytes(data[sos + 2:sos + 4], "big")
+        assert data[sos + 4] == 3
+        # Keep the first component's selector and Ss/Se/AhAl: Ns=1,
+        # Ls = 6 + 2*Ns.
+        first = data[sos + 5:sos + 7]
+        tail = data[sos + 2 + ls - 3:sos + 2 + ls]
+        patched = (data[:sos] + b"\xff\xda\x00\x08\x01" + first + tail
+                   + data[sos + 2 + ls:])
+        with pytest.raises(ImageFormatError,
+                           match="scan/frame component count mismatch"):
+            jc.decode_jpeg(patched)
+
     def test_nonmultiple_of_mcu_dimensions(self):
         rng = np.random.default_rng(8)
         img = rng.integers(0, 256, (17, 19, 3), dtype=np.uint8)

@@ -6,7 +6,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_spark.operators import dedup, multimodal, similarity, textstats
+from ocr_spark.operators import (decontam, dedup, multimodal, sampling,
+                                  similarity, textstats)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,7 +32,7 @@ class TestDedup:
         # 0,1,3 normalize identically -> one group, survivor 0.
         assert out == {0: 3, 2: 1}
 
-    @pytest.mark.parametrize("mode", ["xxhash64", "md5", "poly"])
+    @pytest.mark.parametrize("mode", ["md5", "poly"])
     def test_minhash_lsh_pairs(self, spark, mode):
         base = ("spark shuffles data between stages when wide dependencies "
                 "require repartitioning across the cluster nodes")
@@ -47,6 +48,90 @@ class TestDedup:
         # every mode.
         assert pairs[(0, 1)] > 0.6
         assert (0, 2) not in pairs and (1, 2) not in pairs
+
+    # Pinned 'poly' outputs of fixed strings. The band keys are what
+    # stream_neardup persists in its sidecar, so a change here breaks
+    # matching against committed sidecars.
+    POLY_TEXTS = ["The quick brown fox jumps over the lazy dog", None,
+                  "naïve café — ünïcode text here"]
+    POLY_SIG = [
+        [86521131, 96206776, 112350202, 11718364, 70462352, 10865049,
+         45536366, 171656688, 101702301, 697485, 14597311, 47934206,
+         100123225, 10883001, 15722392, 43156157, 121471620, 26294828,
+         111556170, 341149541, 9825220, 49497188, 6096153, 57338255,
+         46765724, 3398000, 50702008, 50869819, 184550576, 49172183,
+         34883829, 27160813],
+        [1430272678, 1580525473, 845941487, 137687890, 877137367,
+         757788048, 1348523597, 468982585, 1778627844, 2057349823,
+         1193724654, 1828294879, 2065866067, 1824828610, 1430175521,
+         163973687, 366532617, 1409214557, 482041193, 635893209,
+         53081020, 1377427184, 1200667836, 663019030, 1521013606,
+         1296025265, 1875639038, 1905109044, 1230789108, 2010110794,
+         241014922, 815717315],
+        [3815939, 33713068, 43228181, 1793052, 56755403, 65538588,
+         277179687, 31871903, 39092989, 33570827, 11870306, 69210152,
+         56266893, 20680222, 74013754, 45116493, 64802137, 48609769,
+         122556985, 193654308, 22752978, 143588055, 55912581, 162074869,
+         95811701, 67552240, 2775990, 33087274, 247965367, 99920616,
+         140909143, 127645051]]
+    POLY_ANCHORS = [
+        (1, [185802714125172664, 241270221656215260, 151316748730485145,
+             97788601545999856]),
+        (0, [3071487189766694817, 1816645510634992466,
+             1883638153440062864, 2895932373968624441]),
+        (0, [8194666637978540, 92831811832077340, 121881299943688732,
+             595238845422130079])]
+    POLY_BANDS = {
+        0: [3248560332, 3972991655, 424925835, 3493333207, 1196202310,
+            412478125, 2481637918, 3395758773],
+        1: [2654846550, 3856421172, 372239493, 1995146264, 2436765103,
+            448374135, 3512282883, 1667431052]}
+
+    def test_poly_outputs_pinned(self, spark):
+        import pandas as pd
+        texts = pd.Series(self.POLY_TEXTS)
+        sig = dedup._minhash_signatures_pandas_udf(8, 32).func(texts)
+        assert [list(map(int, s)) for s in sig] == self.POLY_SIG
+        an = dedup._ngram_anchor_pandas_udf(8, 4, 2, 32).func(texts)
+        assert [(int(b), list(map(int, a)))
+                for b, a in zip(an["band"], an["an"])] == self.POLY_ANCHORS
+        # NULL normalizes to '': one zero-padded shingle, like ''.
+        sh = dedup._shingle_hashes_pandas_udf(8).func(
+            pd.Series([None, "", "short"]))
+        assert [list(map(int, h)) for h in sh] == [[0], [0], [49276464]]
+        df = spark.createDataFrame(list(enumerate(self.POLY_TEXTS[:2])),
+                                   "doc_id long, text string")
+        bands = {}
+        for r in dedup.minhash_band_rows(df).orderBy("id", "band").collect():
+            bands.setdefault(r["id"], []).append(r["band_hash"])
+        assert bands == self.POLY_BANDS
+
+    @pytest.mark.parametrize("make", [
+        pytest.param(lambda df: dedup.minhash_band_rows(
+            df, hash_mode="xxhash64"), id="minhash_band_rows"),
+        pytest.param(lambda df: dedup.minhash_lsh_pairs(
+            df, hash_mode="xxhash64"), id="minhash_lsh_pairs"),
+        pytest.param(lambda df: dedup.simhash_pairs(
+            df, hash_mode="poly"), id="simhash_pairs"),
+        pytest.param(lambda df: decontam.ngram_hashes(
+            F.col("text"), hash_mode="poly"), id="ngram_hashes"),
+        pytest.param(lambda df: decontam.contamination(
+            df, df, hash_mode="poly"), id="contamination"),
+        pytest.param(lambda df: decontam.substring_duplication(
+            df, hash_mode="MD5"), id="substring_duplication"),
+        pytest.param(lambda df: sampling.token_budget_sample(
+            df, 100, hash_mode="poly"), id="token_budget_sample"),
+        pytest.param(lambda df: sampling.token_shards(
+            df, 100, hash_mode="poly"), id="token_shards"),
+    ])
+    def test_unknown_hash_mode_rejected(self, spark, make):
+        """A hash family an operator does not run is a ValueError
+        naming the accepted ones, never a silent fall-through to
+        another family's buckets."""
+        df = spark.createDataFrame([(0, "some text")],
+                                   "doc_id long, text string")
+        with pytest.raises(ValueError, match="hash_mode must be one of"):
+            make(df)
 
     def test_simhash_pairs(self, spark):
         base = ("spark shuffles data between stages when wide dependencies "
@@ -143,22 +228,16 @@ class TestDedup:
         boiler = "lorem ipsum boilerplate footer text appears everywhere"
         rows = [(0, base), (1, near)] + [(100 + i, boiler) for i in range(4000)]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
-        pairs = dedup.minhash_lsh_pairs(df, threshold=0.5, max_bucket=100).collect()
-        ids = {(r["id_a"], r["id_b"]) for r in pairs}
+        pairs, rep = dedup.minhash_lsh_pairs(df, threshold=0.5,
+                                             max_bucket=100,
+                                             return_report=True)
+        ids = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert (0, 1) in ids
         # The 4000-doc clique would be ~8M pairs; the cap drops it
         # (exact_dedup owns identical docs).
         assert len(ids) == 1
         # Drop counters are observable, not silent.
-        rep = dedup.bucket_report(
-            df.select("doc_id",
-                      dedup.shingles(F.col("text"), 8).alias("sh")).select(
-                "doc_id",
-                dedup.minhash_signature_from_hashes(
-                    dedup.shingle_hashes(F.col("sh")), 32).alias("mh")
-            ).select("doc_id", F.xxhash64(F.concat_ws(
-                ",", F.slice("mh", 1, 4))).alias("band_hash")),
-            ["band_hash"], 100).first()
+        rep = rep.first()
         assert rep["n_hot_buckets"] >= 1
         assert rep["rows_dropped"] >= 4000
 
@@ -506,39 +585,35 @@ class TestSimilarity:
 
     def test_multiprobe_buckets_shape(self, spark, embeddings):
         """probes=p emits 1+p buckets per (row, table): slot 0 is the
-        base signature, each probe differs from it by exactly one bit
-        (both hash-mode paths)."""
+        base signature, each probe differs from it by exactly one bit."""
         base = embeddings.limit(20).select(
             F.col("vec_id").alias("id"),
             F.col("embedding").cast("array<double>").alias("v"))
-        for mode in ("md5", "xxhash64"):
-            plain = {(r["id"], r["table"]): r["bucket"] for r in
-                     similarity._bucket_rows(base, "id", "v", 6, 3,
-                                             mode).collect()}
-            probed = similarity._bucket_rows(base, "id", "v", 6, 3,
-                                             mode, probes=2).collect()
-            per_key = {}
-            for r in probed:
-                per_key.setdefault((r["id"], r["table"]), []).append(
-                    r["bucket"])
-            assert all(len(v) == 3 for v in per_key.values())
-            for key, buckets in per_key.items():
-                assert plain[key] in buckets
-                for b in buckets:
-                    d = bin(b ^ plain[key]).count("1")
-                    assert d <= 1
+        plain = {(r["id"], r["table"]): r["bucket"] for r in
+                 similarity._bucket_rows(base, "id", "v", 6, 3).collect()}
+        probed = similarity._bucket_rows(base, "id", "v", 6, 3,
+                                         probes=2).collect()
+        per_key = {}
+        for r in probed:
+            per_key.setdefault((r["id"], r["table"]), []).append(
+                r["bucket"])
+        assert all(len(v) == 3 for v in per_key.values())
+        for key, buckets in per_key.items():
+            assert plain[key] in buckets
+            for b in buckets:
+                d = bin(b ^ plain[key]).count("1")
+                assert d <= 1
 
     def test_multiprobe_clamps_to_planes(self, spark, embeddings):
         """probes > planes clamps (only `planes` distinct 1-bit flips
-        exist): both hash modes return planes+1 buckets per table
-        instead of faulting (md5) or emitting dead buckets (xxhash64)."""
+        exist): planes+1 buckets per table instead of an argsort
+        fault."""
         base = embeddings.limit(5).select(
             F.col("vec_id").alias("id"),
             F.col("embedding").cast("array<double>").alias("v"))
-        for mode in ("md5", "xxhash64"):
-            rows = similarity._bucket_rows(base, "id", "v", 4, 2, mode,
-                                           probes=99).collect()
-            assert len(rows) == 5 * 2 * (1 + 4)
+        rows = similarity._bucket_rows(base, "id", "v", 4, 2,
+                                       probes=99).collect()
+        assert len(rows) == 5 * 2 * (1 + 4)
 
     def test_multiprobe_recall_never_below_baseline(self, spark,
                                                     embeddings):
@@ -566,10 +641,10 @@ class TestSimilarity:
         base = embeddings.select(
             F.col("vec_id").alias("id"),
             F.col("embedding").cast("array<double>").alias("v"))
-        fast = similarity._bucket_rows(base, "id", "v", 6, 3, "md5")
+        fast = similarity._bucket_rows(base, "id", "v", 6, 3)
         slow = base.select(
             "id", F.explode(similarity._lsh_tables(
-                F.col("v"), 6, 3, "md5")).alias("tb")
+                F.col("v"), 6, 3)).alias("tb")
         ).select("id", "tb.table", "tb.bucket")
         assert fast.exceptAll(slow).count() == 0
         assert slow.exceptAll(fast).count() == 0
@@ -1351,9 +1426,9 @@ class TestStreaming:
         assert sums["sum(committed)"] == 4
 
         # The sidecar holds band keys for exactly the committed docs —
-        # including the NULL-text one, whose [NULL]-shingle signature
-        # is what lets a FUTURE NULL-text doc cross-batch-dedup (batch
-        # parity: minhash_lsh_pairs scores two NULL texts jaccard 1.0).
+        # including the NULL-text one, whose band keys (poly hashes
+        # NULL as '') are what let a FUTURE NULL-text doc reach the
+        # cross-batch verify, where two NULL texts score jaccard 1.0.
         import os
         band_dirs = [d for d in os.listdir(f"{root}/bands")]
         bands_df = spark.read.parquet(
